@@ -489,7 +489,7 @@ def main() -> None:
     with _TPE(max_workers=32) as ex:
         list(ex.map(_link, os.listdir(os.path.join(pristine, mf.MANIFEST_DIR))))
 
-    from rugo_spark.engine import _plan_df_distributed
+    from rugo_spark.engine import _decode_plan
 
     def _man_stats(tag: str) -> None:
         m = _timed(
@@ -498,31 +498,20 @@ def main() -> None:
         )
         assert m["n_rows"] == n_man * 100, (tag, m["n_rows"])
 
-    def _decode_plan(tag: str) -> None:
-        # mirror decode_table's auto choice: distributed spec-scan for a
-        # loose manifest at this size, column-pruned local read once
-        # consolidated (the plan the user's decode actually runs)
-        if len(mf.loose_sidecar_names(man_work)) > 20_000:
-            n = _timed(tag, lambda: _plan_df_distributed(spark, man_work, None).count())
-        else:
-            n = _timed(
-                tag,
-                lambda: len(
-                    mf.visible_partitions(
-                        man_work, cols=["block_path", "checksum", "output_bytes"]
-                    )
-                ),
-            )
+    def _decode_plan_count(tag: str) -> None:
+        # decode_table's own plan (it picks the driver or the executor
+        # planner by manifest size), forced by a count
+        n = _timed(tag, lambda: _decode_plan(spark, man_work)[0].count())
         assert n == n_man, (tag, n)
 
     for _ in range(2):
         _man_stats("manifest_stats_loose")
-        _decode_plan("manifest_decodeplan_loose")
+        _decode_plan_count("manifest_decodeplan_loose")
     _timed("consolidate_manifest", lambda: mf.consolidate_manifest(man_work))
     assert len(mf.loose_sidecar_names(man_work)) == 0
     for _ in range(2):
         _man_stats("manifest_stats_consolidated")
-        _decode_plan("manifest_decodeplan_consolidated")
+        _decode_plan_count("manifest_decodeplan_consolidated")
     extra["manifest_plan_sidecars"] = n_man
     extra["manifest_stats_speedup"] = round(
         min(SAMPLES["manifest_stats_loose"])

@@ -144,29 +144,13 @@ class RugoReader(DataSourceReader):
 
     def partitions(self):
         from rugo_spark import deletes as dl
-        from rugo_spark import manifest as mf
-        from rugo_spark.engine import _sidecar_keep
+        from rugo_spark.engine import _plan_cols, plan
 
         parts = []
         for root in self.roots:
-            # consistent lifecycle view (decode_table's loop): the mask list
-            # and the partition listing must come from one commit state — a
-            # MERGE flip between the two reads would surface its band
-            # without its riding masks, or the masks without the band
-            def _names() -> list[str]:
-                if not os.path.isdir(os.path.join(root, dl.DELETES_DIR)):
-                    return []
-                return dl.visible_delete_files(root)
-
-            for _ in range(4):
-                names = _names()
-                rows = mf.visible_partitions(root)
-                if _names() == names:
-                    break
+            rows, names = plan(root, _plan_cols(self.filters), self.filters or None)
             masks: dict = dl.load_raw(root, names) if names else {}
             for row in rows:
-                if not _sidecar_keep(row, self.filters or None):
-                    continue
                 raw = masks.get(int(row["partition_id"]))
                 parts.append(
                     RugoInputPartition(

@@ -248,6 +248,21 @@ def merge_column_metas(metas_list: list[dict]) -> dict:
     return out
 
 
+def count_missing_as_nulls(merged: dict, parts, cols) -> dict:
+    """Schema evolution: a partition with no meta for a column predates it,
+    so every one of its rows reads NULL there — its ``n_rows`` count as
+    that column's nulls (min/max untouched; nulls don't bound).  ``parts``
+    are ``(metas, n_rows)`` pairs; a pre-merged part (segment summary,
+    executor slice) has already counted its own rows.  Updates ``merged``
+    (a ``merge_column_metas`` result) for ``cols`` and returns it."""
+    for metas, n in parts:
+        for c in cols:
+            if c not in metas:
+                agg = merged.setdefault(c, {"min": None, "max": None, "null_count": 0})
+                agg["null_count"] = int(agg.get("null_count") or 0) + n
+    return merged
+
+
 def _decode_flat_block(buf: memoryview, schema: pa.Schema, columns: list[str] | None):
     magic, n_cols = _FHDR.unpack_from(buf, 0)
     assert magic == FILE_MAGIC, "bad block magic"
@@ -786,7 +801,7 @@ def append_table(
     - readers (decode/manifest/stats/metadata_agg/format('rugo')/compact)
       see NOTHING of the band until the completion marker flips as the
       last step — old rows only, then old plus all new, never a torn
-      middle (``manifest.visible_partitions``);
+      middle (``manifest.scan_specs``);
     - a second append while another session's band is incomplete raises
       (single-writer: allocating around a crashed band would strand it,
       and sharing it would lose rows on the first session's resume).
@@ -1196,6 +1211,17 @@ _DELETE_ENTRY_DDL = (
 )
 
 
+# manifest fields a DML candidate scan needs: block-skip stats + bloom
+_CANDIDATE_COLS = ["partition_id", "block_path", "n_rows", "codecs", "bloom_col", "bloom"]
+
+
+def _outside_band(base: int | None) -> list | None:
+    """Keep ranges excluding a DML's own append band (None: no restriction)."""
+    if base is None:
+        return None
+    return [[0, base], [base + APPEND_BAND, 1 << 62]]
+
+
 def _predicate_mask_entries(
     spark: SparkSession,
     out_dir: str,
@@ -1220,18 +1246,7 @@ def _predicate_mask_entries(
     payload_schema = mf.read_schema_payload(out_dir) or {}
     if size_col is None:
         size_col = payload_schema.get("size_col")
-    cands = [
-        r
-        for r in mf.visible_partitions(
-            out_dir, cols=["partition_id", "block_path", "n_rows", "codecs",
-                           "bloom_col", "bloom"]
-        )
-        if _sidecar_keep(r, filters)
-        and not (
-            exclude_base is not None
-            and exclude_base <= int(r["partition_id"]) < exclude_base + APPEND_BAND
-        )
-    ]
+    cands, _ = plan(out_dir, _CANDIDATE_COLS, filters, _outside_band(exclude_base))
     pids = sorted(int(r["partition_id"]) for r in cands)
     if not cands:
         return [], pids
@@ -1545,22 +1560,11 @@ def _matched_key_mask_entries(
     if bounds["lo"] is None:
         return []
     filters = [(ds_key, ">=", bounds["lo"]), (ds_key, "<=", bounds["hi"])]
-    cands = [
-        r
-        for r in mf.visible_partitions(
-            out_dir, cols=["partition_id", "block_path", "n_rows", "codecs",
-                           "bloom_col", "bloom"]
-        )
-        if _sidecar_keep(r, filters)
-        # a resumed/re-run merge must never target its OWN band: those are
-        # the replacement rows it appended, and re-masking them (under the
-        # same deterministic file name) would overwrite the original masks
-        # and resurface the replaced rows
-        and not (
-            exclude_base is not None
-            and exclude_base <= int(r["partition_id"]) < exclude_base + APPEND_BAND
-        )
-    ]
+    # a resumed/re-run merge must never target its OWN band: those are the
+    # replacement rows it appended, and re-masking them (under the same
+    # deterministic file name) would overwrite the original masks and
+    # resurface the replaced rows
+    cands, _ = plan(out_dir, _CANDIDATE_COLS, filters, _outside_band(exclude_base))
     if not cands:
         return []
     prior_bc = spark.sparkContext.broadcast(
@@ -2580,44 +2584,34 @@ def _meta_aggregatable(t: pa.DataType) -> bool:
     )
 
 
+_STATS_COLS = ["n_rows", "n_tokens", "codecs"]
+
+
 def _metadata_partials_distributed(
     spark: SparkSession, out_dir: str, cols: list[str], keep_ranges=None
 ):
-    """Per-task pre-merge of manifest stats: executors parse + merge their
-    slice of the manifest (loose sidecars AND segment row-group slices) with
-    ``merge_column_metas`` and emit ONE partial row each; the driver merges
-    only #tasks rows.  Same switch point as decode planning
-    (``_plan_df_distributed``) — at 10⁵–10⁶ partitions the driver never
-    holds more than task-count JSON documents."""
-    specs, n_loose = _manifest_scan_specs(
-        out_dir, cols=["n_rows", "n_tokens", "codecs"], keep_ranges=keep_ranges
-    )
-    src = _spec_src_df(spark, specs, n_loose)
+    """Per-task pre-merge of manifest stats: executors expand their slice
+    of ``mf.scan_specs`` (loose sidecar chunks AND segment row-group
+    slices), merge it with ``merge_column_metas`` and emit ONE partial row
+    each; the driver merges only #tasks rows — at 10⁵–10⁶ partitions it
+    never holds more than task-count JSON documents."""
+    src = _spec_src_df(spark, mf.scan_specs(out_dir, _STATS_COLS, keep_ranges))
     want = set(cols)
 
     def merger(batches):
         for batch in batches:
             n_rows = n_tokens = 0
-            metas_list = []
-            missing: dict[str, int] = {}
+            parts = []
             for spec_json in batch.column(0).to_pylist():
                 for row in mf.iter_spec_rows(json.loads(spec_json)):
                     n_rows += int(row["n_rows"])
                     n_tokens += int(row.get("n_tokens") or 0)
                     cd = json.loads(row["codecs"])
-                    metas_list.append({c: m for c, m in cd.items() if c in want})
-                    # pre-evolution partitions: their rows are NULLs for the
-                    # columns they predate (see metadata_agg)
-                    for c in want:
-                        if c not in cd:
-                            missing[c] = missing.get(c, 0) + int(row["n_rows"])
-            if metas_list:
-                merged = merge_column_metas(metas_list)
-                for c, n in missing.items():
-                    agg = merged.setdefault(
-                        c, {"min": None, "max": None, "null_count": 0}
-                    )
-                    agg["null_count"] = int(agg.get("null_count") or 0) + n
+                    parts.append(({c: m for c, m in cd.items() if c in want}, int(row["n_rows"])))
+            if parts:
+                merged = count_missing_as_nulls(
+                    merge_column_metas([m for m, _ in parts]), parts, want
+                )
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array([n_rows], pa.int64()),
@@ -2635,7 +2629,6 @@ def metadata_agg(
     spark: SparkSession,
     out_dir: str,
     columns: list[str] | None = None,
-    distributed: bool | None = None,
     snapshot_id: int | None = None,
 ) -> DataFrame:
     """COUNT / MIN / MAX / null-count answered from the manifest alone —
@@ -2652,8 +2645,10 @@ def metadata_agg(
     Returns a one-row DataFrame: ``n_rows``, ``n_tokens`` (size-mass), and
     per requested column ``min_<c>`` / ``max_<c>`` (the column's own type)
     and ``nulls_<c>``.  Columns default to every stats-bearing primitive
-    column.  ``distributed`` defaults to driver-side below 20k sidecars and
-    a mapInArrow pre-merge above (same heuristic as decode planning).
+    column.  A consolidated dataset answers from the segment catalog's
+    pre-merged summaries plus the loose tail; otherwise the manifest rows
+    merge on the driver, or in a mapInArrow pre-merge when the manifest is
+    large (``_plan_on_executors``, the switch decode planning uses).
 
     ``snapshot_id``: stats as of that snapshot (time travel) — the summary
     fast path is skipped (catalog summaries describe the CURRENT set) and
@@ -2697,84 +2692,29 @@ def metadata_agg(
 
     from rugo_spark import deletes as dl
 
-    def _visible_names() -> list[str]:
-        if not os.path.isdir(os.path.join(out_dir, dl.DELETES_DIR)):
-            return []
-        return dl.visible_delete_files(out_dir, snapshot_id)
+    def _summaries_or_executors():
+        # summaries describe the CURRENT visible set — not a snapshot's
+        fast = mf.summary_scan(out_dir) if keep_ranges is None else None
+        if fast is not None:
+            summaries, loose = fast
+            if not _plan_on_executors(sum(len(s["names"]) for s in loose), 0, stats=True):
+                return [
+                    {"n_rows": int(e["n_rows"]), "n_tokens": int(e["n_tokens"]),
+                     "codecs": json.dumps(e["codecs"])}
+                    for e in summaries
+                ] + [row for s in loose for row in mf.iter_spec_rows(s)]
+        if _plan_on_executors(*mf.manifest_size(out_dir), stats=True):
+            return _metadata_partials_distributed(spark, out_dir, cols, keep_ranges)
+        return None
 
-    def _collect_partials(distributed):
-        # torn append bands are invisible to stats, like every reader — band
-        # filtering happens below (summary fast path), inside
-        # visible_partitions (local) or the scan specs (distributed)
-        bands = mf.incomplete_append_bands(out_dir)
-        loose_names = [
-            n for n in mf.loose_sidecar_names(out_dir)
-            if not any(lo <= _name_pid(n) < hi for lo, hi in bands)
-        ]
-        catalog = mf.segment_catalog(out_dir)
-        # summary fast path: every cataloged segment carries a pre-merged
-        # stats summary, and no loose pid can shadow a segment row (loose
-        # outside all [min_pid, max_pid] ranges) — stats come from the
-        # catalog alone plus the loose tail, with ZERO segment-file opens.
-        # A 10⁶-block dataset answers in catalog-read time — the whole point
-        # of consolidation.  Catalog summaries describe the CURRENT visible
-        # set — unusable while a rollback mask condemns pids or a snapshot
-        # read wants an older set
-        summaries_ok = (
-            bool(catalog)
-            and all(e.get("summary") for e in catalog)
-            and keep_ranges is None
-            and mf.rollback_mask(out_dir) is None
-        )
-        if summaries_ok and loose_names:
-            loose_pids = [_name_pid(n) for n in loose_names]
-            summaries_ok = not any(
-                int(e["min_pid"]) <= p <= int(e["max_pid"])
-                for e in catalog
-                for p in loose_pids
-            )
-        if summaries_ok and len(loose_names) <= 20_000 and distributed is not True:
-            partials = [
-                {
-                    "n_rows": int(e["summary"]["n_rows"]),
-                    "n_tokens": int(e["summary"]["n_tokens"]),
-                    "codecs": json.dumps(e["summary"]["codecs"]),
-                }
-                for e in catalog
-            ]
-            mdir = os.path.join(out_dir, mf.MANIFEST_DIR)
-            for name in loose_names:
-                try:
-                    with open(os.path.join(mdir, name)) as f:
-                        partials.append(json.load(f))
-                except (json.JSONDecodeError, OSError):
-                    continue
-            return partials
-        n_planned = len(loose_names) + sum(int(e["n_rows"]) for e in catalog)
-        if distributed is None:
-            distributed = n_planned > 20_000
-        if distributed:
-            return _metadata_partials_distributed(
-                spark, out_dir, cols, keep_ranges=keep_ranges
-            )
-        _rs = mf.RangeSet(keep_ranges) if keep_ranges is not None else None
-        return [
-            r
-            for r in mf.visible_partitions(
-                out_dir, cols=["n_rows", "n_tokens", "codecs"]
-            )
-            if _rs is None or int(r["partition_id"]) in _rs
-        ]
-
-    # consistent lifecycle view (same loop as decode_table): the partial
-    # stats and the delete-file list must reflect one commit state, or a
-    # MERGE flip mid-read double-counts (new band counted, riding masks
-    # unsubtracted) or under-counts (masks subtracted, band missing)
-    for _ in range(4):
-        names = _visible_names()
-        partials = _collect_partials(distributed)
-        if _visible_names() == names:
-            break
+    # the partial stats and the delete-file list must reflect one commit
+    # state, or a MERGE flip mid-read double-counts (new band counted,
+    # riding masks unsubtracted) or under-counts (masks subtracted, band
+    # missing) — both reads go through _one_commit
+    partials, names = _one_commit(out_dir, snapshot_id, _summaries_or_executors)
+    if partials is None:
+        partials, names = plan(out_dir, _STATS_COLS, keep_ranges=keep_ranges,
+                               snapshot_id=snapshot_id)
 
     n_rows = sum(int(r["n_rows"]) for r in partials)
     n_tokens = sum(int(r.get("n_tokens") or 0) for r in partials)
@@ -2789,19 +2729,11 @@ def metadata_agg(
         n_tokens -= del_tokens
     want = set(cols)
     parsed = [(json.loads(r["codecs"]), int(r["n_rows"])) for r in partials]
-    merged = merge_column_metas(
-        [{c: m for c, m in cd.items() if c in want} for cd, _ in parsed]
+    merged = count_missing_as_nulls(
+        merge_column_metas([{c: m for c, m in cd.items() if c in want} for cd, _ in parsed]),
+        parsed,
+        cols,
     )
-    # schema evolution: a partition that predates a column has no meta for
-    # it — every one of its rows reads as NULL for that column, so its
-    # n_rows count as nulls (min/max untouched; nulls don't bound).
-    # Partials that are already merges (segment summaries, distributed
-    # slices) account for their INTERNAL missing rows themselves.
-    for cd, n in parsed:
-        for c in cols:
-            if c not in cd:
-                agg = merged.setdefault(c, {"min": None, "max": None, "null_count": 0})
-                agg["null_count"] = int(agg.get("null_count") or 0) + n
 
     fields = [pa.field("n_rows", pa.int64()), pa.field("n_tokens", pa.int64())]
     arrays: list[pa.Array] = [pa.array([n_rows], pa.int64()), pa.array([n_tokens], pa.int64())]
@@ -2913,7 +2845,7 @@ def compact_dataset(
     # would leave stale higher-numbered sidecars (or cataloged segments)
     # that silently duplicate rows
     mf.clear_manifest(dst_dir)
-    rows = sorted(mf.visible_partitions(src_dir), key=lambda r: int(r["partition_id"]))
+    rows = mf.visible_partitions(src_dir)  # pid-sorted
     if not rows:
         raise ValueError(f"nothing to compact: {src_dir} has no completed partitions")
     # row-level delete masks: compaction is where deletes get PHYSICALLY
@@ -3259,113 +3191,79 @@ def _sidecar_keep(row: dict, filters: list[tuple] | None) -> bool:
 
 _PLAN_DDL = "block_path string, checksum long"
 
-# above this many sidecars, decode planning (JSON parse + block-skip tests)
-# runs on executors instead of a driver loop (measured: driver parse ≈
-# 0.25 ms/sidecar — ~5 s at 20k; the distributed plan costs one extra
-# stage ≈ 1-2 s, so it pays above ~20k and is mandatory at 10⁵-10⁶)
+# Where manifest planning runs, in loose-sidecar equivalents.  A driver
+# loop pays per sidecar (file open + JSON parse); an executor stage pays
+# ≈1-2 s once, so it wins above ~20k sidecars and is mandatory at 10⁵-10⁶.
 _DISTRIBUTED_PLAN_THRESHOLD = 20000
 
 
-_SEGMENT_RGS_PER_SPEC = 8  # ~16k manifest rows per planning task
+def _plan_on_executors(n_loose: int, n_segment_rows: int, stats: bool) -> bool:
+    """The one local/executor switch of every manifest reader.  A segment
+    row whose stats JSON is parsed and merged (``stats``: metadata_agg)
+    costs about a loose sidecar (measured on 4 cores: 31 vs 47 µs a row);
+    one read for its block path only (decode planning) weighs 1/50, which
+    also keeps a consolidated decode off the executor plan's one task per
+    ~16k-row spec."""
+    return n_loose + n_segment_rows // (1 if stats else 50) > _DISTRIBUTED_PLAN_THRESHOLD
 
 
-_SIDECARS_PER_SPEC = 256
+def _one_commit(out_dir: str, snapshot_id: int | None, read):
+    """Run ``read()`` against one commit state; returns ``(read(),
+    delete_file_names)``.  The visible delete files and the manifest view
+    must agree — a MERGE flip between the two reads would surface its new
+    band WITHOUT its riding masks (both row versions) or the masks WITHOUT
+    the band (neither).  Re-reading the delete list after ``read()``
+    detects a commit that landed mid-read; retry until stable (bounded —
+    lifecycle commits are rare).  Snapshot reads are frozen entries."""
+    from rugo_spark import deletes as dl
+
+    def names() -> list[str]:
+        if not os.path.isdir(os.path.join(out_dir, dl.DELETES_DIR)):
+            return []
+        return dl.visible_delete_files(out_dir, snapshot_id)
+
+    for _ in range(4):
+        before = names()
+        got = read()
+        if names() == before:
+            break
+    return got, before
 
 
-def _name_pid(name: str) -> int:
-    try:
-        return int(name[len("part-"):-len(".json")])
-    except ValueError:
-        return -1
-
-
-def _manifest_scan_specs(
+def plan(
     out_dir: str,
-    cols: list[str] | None = None,
+    cols: list[str] | None,
+    filters: list[tuple] | None = None,
     keep_ranges: list | None = None,
-) -> tuple[list[dict], int]:
-    """Driver-side planning inputs for a distributed manifest scan: one spec
-    per loose sidecar (band-filtered by filename pid — the driver never
-    parses them) plus one spec per row-group slice of every cataloged
-    segment.  ``cols`` prunes the segment read to the named sidecar fields
-    (e.g. filterless decode planning touches only block_path + checksum —
-    never the bloom bytes).  Returns ``(specs, n_loose)``; executors expand
-    each spec via ``mf.iter_spec_rows`` with exactly-once pid semantics
-    (loose overrides segment, incomplete append bands invisible)."""
-    mdir = os.path.join(out_dir, mf.MANIFEST_DIR)
-    sdir = os.path.join(out_dir, mf.SEGMENTS_DIR)
-    bands = mf.incomplete_append_bands(out_dir)
-    catalog = mf.segment_catalog(out_dir)
-    # effective keep set = time-travel snapshot ranges ∩ rollback mask
-    # (condemned pids invisible even to a snapshot read — their blocks are
-    # being deleted)
-    mask = mf.rollback_mask(out_dir)
-    if mask is not None:
-        keep_ranges = mask if keep_ranges is None else mf.intersect_ranges(keep_ranges, mask)
-    keep = mf.RangeSet(keep_ranges) if keep_ranges is not None else None
-    specs: list[dict] = []
-    loose_pids: list[int] = []
-    loose_names: list[str] = []
-    for name in mf.loose_sidecar_names(out_dir):
-        pid = _name_pid(name)
-        if any(lo <= pid < hi for lo, hi in bands):
-            continue
-        if keep is not None and pid not in keep:
-            continue
-        loose_pids.append(pid)
-        loose_names.append(name)
-    # CHUNKED loose specs (r6): one spec per ~256 sidecars instead of one
-    # per file.  Per-file specs made the driver build + json.dumps 100k
-    # dicts and ship a 100k-row DataFrame through a round-robin exchange —
-    # 1.3 s driver + ~1 s exchange at 100k sidecars, pure overhead.  The
-    # executor expands a chunk by opening its names; the crash-window
-    # fallback (loose file torn/deleted mid-plan while its pid also lives
-    # in a segment) resolves executor-side from the chunk's catalog ranges.
-    cat_ranges = [
-        [os.path.join(sdir, e["file"]), int(e["min_pid"]), int(e["max_pid"])]
-        for e in catalog
-    ]
-    for i in range(0, len(loose_names), _SIDECARS_PER_SPEC):
-        spec = {
-            "kind": "sidecars",
-            "dir": mdir,
-            "names": loose_names[i : i + _SIDECARS_PER_SPEC],
-        }
-        if cat_ranges:
-            spec["catalog"] = cat_ranges
-        specs.append(spec)
-    n_loose = len(loose_names)
-    for entry in catalog:
-        # whole-segment prune: a segment disjoint from the keep set never
-        # schedules a spec (a 10⁶-block dataset time-travelling to an early
-        # snapshot plans only the covering segments)
-        if keep_ranges is not None and not mf.intersect_ranges(
-            [[int(entry["min_pid"]), int(entry["max_pid"]) + 1]], keep_ranges
-        ):
-            continue
-        n_rg = max(1, -(-int(entry["n_rows"]) // mf._SEGMENT_ROW_GROUP))
-        for start in range(0, n_rg, _SEGMENT_RGS_PER_SPEC):
-            spec = {
-                "kind": "segment",
-                "path": os.path.join(sdir, entry["file"]),
-                "rg_start": start,
-                "rg_end": min(start + _SEGMENT_RGS_PER_SPEC, n_rg),
-                "skip": loose_pids,
-                "bands": [list(b) for b in bands],
-                "cols": cols,
-            }
-            if keep_ranges is not None:
-                spec["keep"] = keep_ranges
-            specs.append(spec)
-    return specs, n_loose
+    snapshot_id: int | None = None,
+) -> tuple[list[dict], list[str]]:
+    """The driver-side planner every reader shares: ``(rows,
+    delete_file_names)`` from one commit state, where ``rows`` are the
+    visible manifest rows (``cols``-pruned, restricted to ``keep_ranges``)
+    whose min/max stats and bloom may match ``filters``."""
+    return _one_commit(
+        out_dir,
+        snapshot_id,
+        lambda: [
+            r for r in mf.visible_partitions(out_dir, cols, keep_ranges)
+            if _sidecar_keep(r, filters)
+        ],
+    )
 
 
-def _spec_src_df(spark: SparkSession, specs: list[dict], n_loose: int):
+def _plan_cols(filters) -> list[str]:
+    """Manifest fields block planning reads: without filters only
+    block_path + checksum (a column-pruned segment read never touches the
+    bloom bytes); with filters the stats + bloom of the skip tests."""
+    return ["block_path", "checksum"] + (["codecs", "bloom_col", "bloom"] if filters else [])
+
+
+def _spec_src_df(spark: SparkSession, specs: list[dict]):
     import pandas as pd
 
     pdf = pd.DataFrame({"spec": [json.dumps(s) for s in specs]})
-    # every spec is a real unit of work now (a ~256-sidecar chunk or a
-    # segment row-group slice) — one task per spec up to 4 waves/core
+    # every spec is a real unit of work (a ~256-sidecar chunk or a segment
+    # row-group slice) — one task per spec up to 4 waves/core
     n_tasks = max(1, min(len(specs), spark.sparkContext.defaultParallelism * 4))
     return spark.createDataFrame(pdf).repartition(n_tasks)
 
@@ -3373,20 +3271,13 @@ def _spec_src_df(spark: SparkSession, specs: list[dict], n_loose: int):
 def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges=None):
     """Manifest planning as a DataFrame job: the driver only lists sidecar
     FILENAMES and reads the segment catalog; JSON parsing, min/max pruning
-    and bloom probes run in a mapInArrow stage.  At 10⁵–10⁶ blocks a
-    driver-side Python loop over sidecars is the planning bottleneck
-    (VERDICT round 1) — this keeps the driver O(#loose files) in strings.
-    Consolidated datasets plan from parquet segment slices instead of
-    per-partition JSON opens (VERDICT r4 item 2)."""
+    and bloom probes run in a mapInArrow stage over ``mf.scan_specs``.  At
+    10⁵–10⁶ blocks a driver-side Python loop over sidecars is the planning
+    bottleneck (VERDICT round 1) — this keeps the driver O(#loose files)
+    in strings."""
     import pyarrow as _pa
 
-    # column-pruned segment read: without filters planning needs only
-    # block_path + checksum; with filters add stats + bloom for skip tests
-    cols = ["block_path", "checksum"]
-    if filters:
-        cols += ["codecs", "bloom_col", "bloom"]
-    specs, n_loose = _manifest_scan_specs(out_dir, cols=cols, keep_ranges=keep_ranges)
-    src = _spec_src_df(spark, specs, n_loose)
+    src = _spec_src_df(spark, mf.scan_specs(out_dir, _plan_cols(filters), keep_ranges))
 
     def planner(batches):
         for batch in batches:
@@ -3405,6 +3296,50 @@ def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges
     return src.mapInArrow(planner, _PLAN_DDL)
 
 
+def _decode_plan(
+    spark: SparkSession,
+    out_dir: str,
+    filters: list[tuple] | None = None,
+    keep_ranges: list | None = None,
+    snapshot_id: int | None = None,
+    num_tasks: int | None = None,
+):
+    """``decode_table``'s plan: ``(DataFrame of (block_path, checksum) or
+    None when no block survives, delete_file_names)``.  Small manifests
+    plan on the driver (``plan``); large ones in an executor stage over the
+    same specs (``_plan_df_distributed``)."""
+    if _plan_on_executors(*mf.manifest_size(out_dir), stats=False):
+        man, names = _one_commit(
+            out_dir, snapshot_id,
+            lambda: _plan_df_distributed(spark, out_dir, filters, keep_ranges),
+        )
+        if num_tasks:  # else decode runs on the planner's partitioning
+            man = man.repartition(max(1, min(int(num_tasks), 4096)))
+        return man, names
+    import pandas as pd
+
+    rows, names = plan(out_dir, _plan_cols(filters) + ["output_bytes"], filters,
+                       keep_ranges, snapshot_id)
+    if not rows:
+        return None, names
+    if num_tasks is None:
+        # one task per block is right for few big blocks, pathological
+        # for many small ones (task overhead ~10-20 ms): target ≥4 waves
+        # per core OR ~32 MB per task, whichever gives more tasks
+        total_bytes = sum(int(r.get("output_bytes") or 0) for r in rows)
+        num_tasks = min(
+            len(rows),
+            max(spark.sparkContext.defaultParallelism * 4, total_bytes // (32 << 20)),
+        )
+    pdf = pd.DataFrame(
+        {
+            "block_path": [r["block_path"] for r in rows],
+            "checksum": [int(r["checksum"]) for r in rows],
+        }
+    )
+    return spark.createDataFrame(pdf).repartition(max(1, min(int(num_tasks), 4096))), names
+
+
 def decode_table(
     spark: SparkSession,
     out_dir: str,
@@ -3412,7 +3347,6 @@ def decode_table(
     num_tasks: int | None = None,
     filters: list[tuple] | None = None,
     verify_checksums: bool = False,
-    plan: str = "auto",
     on_corrupt: str = "error",
     snapshot_id: int | None = None,
     _restrict_ranges: list | None = None,
@@ -3422,9 +3356,9 @@ def decode_table(
     (ANDed ``(col, op, value)`` triples) skip whole blocks via manifest
     min/max stats *and* are re-applied exactly on the decoded rows.
 
-    ``plan``: 'local' parses sidecars in a driver loop (lowest latency for
-    small manifests), 'distributed' plans in a Spark stage (scales to 10⁶
-    blocks), 'auto' switches on manifest size.
+    Planning reads only the manifest: small manifests in a driver loop
+    (lowest latency), large ones in a Spark stage (scales to 10⁶ blocks);
+    ``_plan_on_executors`` picks by manifest size.
 
     ``on_corrupt`` (with ``verify_checksums``): 'error' fails the job on a
     checksum mismatch; 'skip' quarantines the block (logs to stderr, decodes
@@ -3435,8 +3369,8 @@ def decode_table(
     ``snapshot_id``: time travel — decode the dataset exactly as it was at
     that snapshot (``manifest.snapshot_log``; the Iceberg as-of-snapshot
     analog).  Within a dataset dir partitions are append-only, so a
-    snapshot is a pid-range set and planning simply restricts to it — both
-    plan paths, including whole-segment pruning of disjoint segments."""
+    snapshot is a pid-range set and planning simply restricts to it,
+    including whole-segment pruning of disjoint segments."""
     if snapshot_id is not None:
         snapshot_id = mf.resolve_snapshot(out_dir, snapshot_id)  # tags ok
     keep_ranges = (
@@ -3491,76 +3425,7 @@ def decode_table(
         out_schema = StructType([f for f in full.fields if f.name in want])
     else:
         out_schema = full
-    import pandas as pd
-
-    def _visible_names() -> list[str]:
-        if not os.path.isdir(os.path.join(out_dir, dl.DELETES_DIR)):
-            return []
-        return dl.visible_delete_files(out_dir, snapshot_id)
-
-    def _build_plan(requested_tasks):
-        """Driver-side capture of the partition view (both plan paths list
-        pids inside this call).  Returns (man_df_or_None, empty_schema_df?)."""
-        nonlocal plan
-        sidecar_names = mf.loose_sidecar_names(out_dir)
-        catalog = mf.segment_catalog(out_dir)
-        n_seg_rows = sum(int(e["n_rows"]) for e in catalog)
-        if not sidecar_names and not n_seg_rows:
-            return None
-        if plan == "auto":
-            # a consolidated row costs ~50× less to plan than a loose JSON
-            # open (column-pruned parquet read vs per-file syscall + full
-            # parse), so the local/distributed switch weighs them accordingly
-            eff = len(sidecar_names) + n_seg_rows // 50
-            plan = "distributed" if eff > _DISTRIBUTED_PLAN_THRESHOLD else "local"
-        par = spark.sparkContext.defaultParallelism
-        if plan == "distributed":
-            man = _plan_df_distributed(spark, out_dir, filters, keep_ranges=keep_ranges)
-            if requested_tasks:  # else decode runs on the planner's partitioning
-                man = man.repartition(max(1, min(int(requested_tasks), 4096)))
-            return man
-        plan_cols = ["block_path", "checksum", "output_bytes"]
-        if filters:
-            plan_cols += ["codecs", "bloom_col", "bloom"]
-        rs = mf.RangeSet(keep_ranges) if keep_ranges is not None else None
-        completed = [
-            r
-            for r in mf.visible_partitions(out_dir, cols=plan_cols)
-            if (rs is None or int(r["partition_id"]) in rs) and _sidecar_keep(r, filters)
-        ]
-        if not completed:
-            return None
-        pdf = pd.DataFrame(
-            {
-                "block_path": [r["block_path"] for r in completed],
-                "checksum": [int(r["checksum"]) for r in completed],
-            }
-        )
-        if requested_tasks is None:
-            # one task per block is right for few big blocks, pathological
-            # for many small ones (task overhead ~10-20 ms): target ≥4 waves
-            # per core OR ~32 MB per task, whichever gives more tasks
-            total_bytes = sum(int(r.get("output_bytes") or 0) for r in completed)
-            requested_tasks = min(
-                len(completed), max(par * 4, total_bytes // (32 << 20))
-            )
-        return spark.createDataFrame(pdf).repartition(
-            max(1, min(int(requested_tasks), 4096))
-        )
-
-    # consistent lifecycle view: the delete-mask list and the partition
-    # listing must come from the same commit state — a MERGE flip between
-    # the two would surface its new band WITHOUT its riding masks (both row
-    # versions) or the masks WITHOUT the band (neither).  Both plan paths
-    # capture the pid universe driver-side inside _build_plan, so re-reading
-    # the visible file list after planning detects any commit that landed
-    # mid-read; retry until stable (bounded — lifecycle commits are rare).
-    # Snapshot reads are frozen entries: stable by construction.
-    for _ in range(4):
-        names = _visible_names()
-        man = _build_plan(num_tasks)
-        if _visible_names() == names:
-            break
+    man, names = _decode_plan(spark, out_dir, filters, keep_ranges, snapshot_id, num_tasks)
     if man is None:
         return _to_logical(spark.createDataFrame([], out_schema))
     masks_raw: dict = dl.load_raw(out_dir, names) if names else {}

@@ -206,19 +206,6 @@ def loose_sidecar_names(out_dir: str) -> list[str]:
     )
 
 
-def loose_sidecar_rows(out_dir: str) -> list[dict]:
-    """All valid loose sidecars (torn/partial files are skipped → re-encoded)."""
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    rows = []
-    for name in loose_sidecar_names(out_dir):
-        try:
-            with open(os.path.join(mdir, name)) as f:
-                rows.append(json.load(f))
-        except (json.JSONDecodeError, OSError):
-            continue
-    return rows
-
-
 def segment_catalog(out_dir: str) -> list[dict]:
     """Catalog entries of committed manifest segments, in commit order:
     ``[{"file", "n_rows", "min_pid", "max_pid"}, ...]``.
@@ -291,21 +278,6 @@ def read_segment_rows(seg_path: str, columns: list[str] | None = None) -> list[d
     return _rows_from_segment_table(tbl)
 
 
-def segment_rows(out_dir: str, cols: list[str] | None = None) -> dict[int, dict]:
-    """pid → row across all cataloged segments (later segments win; overlap
-    only exists transiently in the crash window between a catalog commit and
-    the sidecar deletion that follows it, where both copies are identical).
-    ``cols`` prunes the parquet read to the named sidecar fields."""
-    if cols is not None and "partition_id" not in cols:
-        cols = ["partition_id"] + list(cols)
-    out: dict[int, dict] = {}
-    sdir = os.path.join(out_dir, SEGMENTS_DIR)
-    for entry in segment_catalog(out_dir):
-        for row in read_segment_rows(os.path.join(sdir, entry["file"]), columns=cols):
-            out[int(row["partition_id"])] = row
-    return out
-
-
 def segment_pids(out_dir: str) -> set[int]:
     """Partition ids covered by cataloged segments — reads ONLY the
     ``partition_id`` column (no row_json parse)."""
@@ -317,32 +289,6 @@ def segment_pids(out_dir: str) -> set[int]:
         tbl = pq.read_table(os.path.join(sdir, entry["file"]), columns=["partition_id"])
         pids.update(int(p) for p in tbl.column("partition_id").to_pylist())
     return pids
-
-
-def completed_partitions(out_dir: str, cols: list[str] | None = None) -> list[dict]:
-    """All completed partitions: cataloged segment rows merged with loose
-    sidecars (loose wins per pid — it is the freshest write), sorted by
-    partition id.  ``cols`` prunes the SEGMENT parquet read (loose JSON
-    sidecars always parse whole — they are the small tail).
-
-    Pids condemned by an in-progress rollback (outside the
-    ``_rollback.json`` target ranges) are excluded HERE, below even the
-    resume paths: condemned partitions are being deleted, so neither a
-    reader nor a resume may treat them as existing."""
-    merged = segment_rows(out_dir, cols=cols) if os.path.exists(
-        os.path.join(out_dir, SEGMENTS_FILE)
-    ) else {}
-    if not merged:
-        rows = loose_sidecar_rows(out_dir)
-    else:
-        for row in loose_sidecar_rows(out_dir):
-            merged[int(row["partition_id"])] = row
-        rows = [merged[k] for k in sorted(merged)]
-    mask = rollback_mask(out_dir)
-    if mask is not None:
-        keep = RangeSet(mask)
-        rows = [r for r in rows if int(r["partition_id"]) in keep]
-    return rows
 
 
 def consolidate_manifest(out_dir: str, min_sidecars: int = 1) -> dict:
@@ -562,20 +508,17 @@ def _write_segment_file(out_dir: str, fold: list[dict], seq: int) -> dict:
     tmp = os.path.join(sdir, f".tmp-{uuid.uuid4().hex}")
     pq.write_table(tbl, tmp, row_group_size=_SEGMENT_ROW_GROUP, compression="zstd")
     os.replace(tmp, os.path.join(sdir, seg_name))
-    from rugo_spark.engine import merge_column_metas
+    from rugo_spark.engine import count_missing_as_nulls, merge_column_metas
 
     fold_codecs = [json.loads(r.get("codecs") or "{}") for r in fold]
     summary_codecs = merge_column_metas(fold_codecs)
-    # schema evolution: folded rows that predate a column contribute their
-    # n_rows as nulls to that column's summary (the metadata_agg fast path
-    # reads ONLY this summary — without the adjustment an evolved column's
-    # null count would silently undercount pre-evolution rows)
-    for cd, r in zip(fold_codecs, fold):
-        for c in summary_codecs:
-            if c not in cd:
-                summary_codecs[c]["null_count"] = int(
-                    summary_codecs[c].get("null_count") or 0
-                ) + int(r["n_rows"])
+    # the metadata_agg fast path reads ONLY this summary, so it must count
+    # the nulls of folded rows that predate a column
+    count_missing_as_nulls(
+        summary_codecs,
+        [(cd, int(r["n_rows"])) for cd, r in zip(fold_codecs, fold)],
+        list(summary_codecs),
+    )
     summary = {
         "n_rows": sum(int(r["n_rows"]) for r in fold),
         "n_tokens": sum(int(r.get("n_tokens") or 0) for r in fold),
@@ -601,87 +544,207 @@ def _commit_catalog(out_dir: str, segments: list[dict]) -> None:
     os.replace(cat_tmp, os.path.join(out_dir, SEGMENTS_FILE))
 
 
+# ------------------------------------------------------------ visibility
+#
+# The one statement of which manifest rows a reader sees.  Every reader —
+# the driver expansions below, decode planning and metadata_agg on
+# executors, the stats summary path — plans from ``scan_specs``, the only
+# place these rules are applied:
+#
+# * loose over segment: a loose sidecar is the freshest write of its pid,
+#   so segment rows of pids with a loose file are skipped (they coexist
+#   only in the crash window between a consolidation's catalog commit and
+#   its sidecar deletes, and are then identical);
+# * incomplete append bands are hidden — old rows, then old plus ALL new,
+#   never a torn middle (resume paths ask for them with ``incomplete``);
+# * a rollback mask hides condemned pids, even from a snapshot read;
+# * ``keep_ranges`` (a snapshot's pid ranges) restricts the view.
+
+_SEGMENT_RGS_PER_SPEC = 8  # ~16k manifest rows per planning task
+_SIDECARS_PER_SPEC = 256
+
+
+def _name_pid(name: str) -> int:
+    try:
+        return int(name[len("part-"):-len(".json")])
+    except ValueError:
+        return -1
+
+
+def manifest_size(out_dir: str) -> tuple[int, int]:
+    """``(loose sidecars, cataloged segment rows)`` — what a manifest scan
+    reads, and so what the local/executor planning switch weighs."""
+    return (
+        len(loose_sidecar_names(out_dir)),
+        sum(int(e["n_rows"]) for e in segment_catalog(out_dir)),
+    )
+
+
+def scan_specs(
+    out_dir: str,
+    cols: list[str] | None = None,
+    keep_ranges: list | None = None,
+    incomplete: bool = False,
+) -> list[dict]:
+    """The visible manifest as planning specs: chunks of loose sidecar names
+    (filtered by filename pid — nothing is parsed here) plus row-group
+    slices of every cataloged segment.  ``iter_spec_rows`` expands a spec
+    with exactly-once pid semantics, on the driver or on an executor.
+    ``cols`` prunes the segment read to the named sidecar fields (loose JSON
+    always parses whole); ``incomplete=True`` keeps incomplete append bands
+    (resume must see their partial state to skip it)."""
+    mdir = os.path.join(out_dir, MANIFEST_DIR)
+    sdir = os.path.join(out_dir, SEGMENTS_DIR)
+    bands = [] if incomplete else incomplete_append_bands(out_dir)
+    catalog = segment_catalog(out_dir)
+    mask = rollback_mask(out_dir)
+    if mask is not None:
+        keep_ranges = mask if keep_ranges is None else intersect_ranges(keep_ranges, mask)
+    keep = RangeSet(keep_ranges) if keep_ranges is not None else None
+    loose_pids: list[int] = []
+    loose_names: list[str] = []
+    for name in loose_sidecar_names(out_dir):
+        pid = _name_pid(name)
+        if any(lo <= pid < hi for lo, hi in bands):
+            continue
+        if keep is not None and pid not in keep:
+            continue
+        loose_pids.append(pid)
+        loose_names.append(name)
+    # loose sidecars ship as name chunks: per-file specs made the driver
+    # build and serialize 10⁵ dicts (measured r6: 1.3 s driver + ~1 s
+    # exchange at 100k sidecars).  A chunk's torn or vanished file (a
+    # consolidation deleting it mid-plan) falls back to the catalog ranges.
+    cat_ranges = [
+        [os.path.join(sdir, e["file"]), int(e["min_pid"]), int(e["max_pid"])]
+        for e in catalog
+    ]
+    specs: list[dict] = []
+    for i in range(0, len(loose_names), _SIDECARS_PER_SPEC):
+        spec = {"kind": "sidecars", "dir": mdir,
+                "names": loose_names[i : i + _SIDECARS_PER_SPEC]}
+        if cat_ranges:
+            spec["catalog"] = cat_ranges
+        specs.append(spec)
+    for entry in catalog:
+        # whole-segment prune: a segment disjoint from the keep set never
+        # yields a spec (time travel to an early snapshot of a 10⁶-block
+        # dataset reads only the covering segments)
+        if keep_ranges is not None and not intersect_ranges(
+            [[int(entry["min_pid"]), int(entry["max_pid"]) + 1]], keep_ranges
+        ):
+            continue
+        n_rg = max(1, -(-int(entry["n_rows"]) // _SEGMENT_ROW_GROUP))
+        for start in range(0, n_rg, _SEGMENT_RGS_PER_SPEC):
+            spec = {
+                "kind": "segment",
+                "path": os.path.join(sdir, entry["file"]),
+                "rg_start": start,
+                "rg_end": min(start + _SEGMENT_RGS_PER_SPEC, n_rg),
+                "skip": loose_pids,
+                "bands": [list(b) for b in bands],
+                "cols": cols,
+            }
+            if keep_ranges is not None:
+                spec["keep"] = keep_ranges
+            specs.append(spec)
+    return specs
+
+
 def iter_spec_rows(spec: dict):
-    """Executor-side row source for distributed manifest planning: yields
-    sidecar row dicts from a ``{"kind": "sidecar", "path"}`` spec (one JSON
-    file; torn files yield nothing → partition counts as not-done) or a
-    ``{"kind": "segment", "path", "rg_start", "rg_end", "skip", "bands"}``
-    spec (a row-group slice of a segment parquet; ``skip`` = pids overridden
-    by loose sidecars, ``bands`` = incomplete append bands — both invisible
-    here so the pid is planned exactly once, from its freshest source)."""
+    """Sidecar row dicts of one ``scan_specs`` spec.  ``"sidecars"``: one
+    JSON file per name; a torn or vanished file resolves from the segment
+    whose pid range covers it (its pid is in every segment spec's skip
+    list, so without the fallback the partition would drop from the plan),
+    else yields nothing (the partition counts as not done).  ``"segment"``:
+    a row-group slice, minus ``skip`` (pids a loose file overrides),
+    ``bands`` and pids outside ``keep``."""
+    import pyarrow.parquet as pq
+
     if spec["kind"] == "sidecars":
-        # r6 chunk form: one spec per ~256 loose sidecars (driver ships
-        # names, not per-file dicts).  Same exactly-once semantics as the
-        # single-file kind; the torn/vanished-file fallback resolves from
-        # the chunk's segment catalog ranges.
-        cat = spec.get("catalog") or []
         for name in spec["names"]:
             try:
                 with open(os.path.join(spec["dir"], name)) as f:
                     yield json.load(f)
                 continue
             except (json.JSONDecodeError, OSError):
-                try:
-                    pid = int(name[len("part-"):-len(".json")])
-                except ValueError:
-                    continue
-                import pyarrow.parquet as pq
-
-                for seg_path, lo, hi in cat:
-                    if int(lo) <= pid <= int(hi):
-                        tbl = pq.read_table(
-                            seg_path, filters=[("partition_id", "=", pid)]
-                        )
-                        rows = _rows_from_segment_table(tbl)
-                        if rows:
-                            yield rows[0]
-                            break
+                pid = _name_pid(name)
+            for seg_path, lo, hi in spec.get("catalog") or []:
+                if int(lo) <= pid <= int(hi):
+                    tbl = pq.read_table(seg_path, filters=[("partition_id", "=", pid)])
+                    rows = _rows_from_segment_table(tbl)
+                    if rows:
+                        yield rows[0]
+                        break
         return
-    if spec["kind"] == "sidecar":
-        try:
-            with open(spec["path"]) as f:
-                yield json.load(f)
-            return
-        except (json.JSONDecodeError, OSError):
-            # the pid is in every segment spec's skip list (the driver saw a
-            # loose file), so if the file vanished mid-plan (a concurrent
-            # consolidation's step-5 delete) or is torn, falling through
-            # would silently drop the partition from a distributed plan —
-            # the local path would NOT (it falls back to the segment row).
-            # Recover from the driver-supplied fallback segments (review r5).
-            pid = spec.get("pid")
-            for seg_path in spec.get("fallback_segs") or []:
-                import pyarrow.parquet as pq
-
-                tbl = pq.read_table(seg_path, filters=[("partition_id", "=", pid)])
-                rows = _rows_from_segment_table(tbl)
-                if rows:
-                    yield rows[0]
-                    return
-            return
-    import pyarrow.parquet as pq
+    import numpy as np
 
     pf = pq.ParquetFile(spec["path"])
     lo = int(spec.get("rg_start") or 0)
     hi = min(int(spec.get("rg_end") or pf.num_row_groups), pf.num_row_groups)
-    skip = set(spec.get("skip") or [])
-    bands = [(int(a), int(b)) for a, b in (spec.get("bands") or [])]
-    # "keep": [lo, hi) ranges a time-travel read or rollback mask restricts
-    # planning to — pids outside are invisible from this spec
-    keep = RangeSet(spec["keep"]) if spec.get("keep") is not None else None
     cols = spec.get("cols")  # None = every column; else prune (must keep pid)
     if cols is not None and "partition_id" not in cols:
         cols = ["partition_id"] + list(cols)
-    for rg in range(lo, hi):
-        t = pf.read_row_group(rg, columns=cols)
-        rows = _rows_from_segment_table(t)
-        for row in rows:
-            pid = int(row["partition_id"])
-            if pid in skip or any(a <= pid < b for a, b in bands):
-                continue
-            if keep is not None and pid not in keep:
-                continue
-            yield row
+    tbl = pf.read_row_groups(range(lo, hi), columns=cols)
+    # visibility filter on the pid column before any row dict is built
+    pids = tbl.column("partition_id").to_numpy()
+    hidden = np.isin(pids, np.asarray(spec.get("skip") or [], dtype=np.int64))
+    for a, b in spec.get("bands") or []:
+        hidden |= (pids >= int(a)) & (pids < int(b))
+    if spec.get("keep") is not None:
+        kept = np.zeros(len(pids), dtype=bool)
+        for a, b in spec["keep"]:
+            kept |= (pids >= int(a)) & (pids < int(b))
+        hidden |= ~kept
+    if hidden.any():
+        tbl = tbl.filter(pa.array(~hidden))
+    yield from _rows_from_segment_table(tbl)
+
+
+def _expand(specs: list[dict]) -> list[dict]:
+    """Driver-side expansion of ``scan_specs``, sorted by pid (a later
+    segment wins a pid it shares with an earlier one)."""
+    rows: dict[int, dict] = {}
+    for spec in specs:
+        for row in iter_spec_rows(spec):
+            rows[int(row["partition_id"])] = row
+    return [rows[p] for p in sorted(rows)]
+
+
+def visible_partitions(
+    out_dir: str, cols: list[str] | None = None, keep_ranges: list | None = None
+) -> list[dict]:
+    """The manifest rows a reader sees, sorted by partition id."""
+    return _expand(scan_specs(out_dir, cols, keep_ranges))
+
+
+def completed_partitions(out_dir: str, cols: list[str] | None = None) -> list[dict]:
+    """``visible_partitions`` with incomplete append bands left in: every
+    partition written so far, which is what resume paths must skip.
+    Rollback-condemned pids stay hidden — they are being deleted, so
+    neither a reader nor a resume may treat them as existing."""
+    return _expand(scan_specs(out_dir, cols, incomplete=True))
+
+
+def summary_scan(out_dir: str) -> tuple[list[dict], list[dict]] | None:
+    """The stats fast path: each cataloged segment's pre-merged summary plus
+    the loose-tail specs — no segment file is opened, so a 10⁶-block
+    consolidated dataset answers in catalog-read time.  None when the
+    summaries cannot stand for the visible set: a segment lacks one, a
+    rollback mask condemns pids, or a loose pid falls inside a segment's
+    pid range (it may shadow a summarized row)."""
+    catalog = segment_catalog(out_dir)
+    if (
+        not catalog
+        or not all(e.get("summary") for e in catalog)
+        or rollback_mask(out_dir) is not None
+    ):
+        return None
+    loose = [s for s in scan_specs(out_dir) if s["kind"] == "sidecars"]
+    pids = [_name_pid(n) for s in loose for n in s["names"]]
+    if any(int(e["min_pid"]) <= p <= int(e["max_pid"]) for e in catalog for p in pids):
+        return None
+    return [e["summary"] for e in catalog], loose
 
 
 def load_rows(out_dir: str, pids: list[int]) -> dict[int, dict]:
@@ -704,8 +767,8 @@ def load_rows(out_dir: str, pids: list[int]) -> dict[int, dict]:
 
         want = set(missing)
         sdir = os.path.join(out_dir, SEGMENTS_DIR)
-        # newest-first so first-found == latest (mirrors segment_rows'
-        # later-segment-wins merge)
+        # newest-first so first-found == latest (a later segment wins a
+        # pid it shares with an earlier one)
         for entry in reversed(segment_catalog(out_dir)):
             if not want:
                 break
@@ -792,23 +855,6 @@ def incomplete_append_bands(out_dir: str) -> list[tuple[int, int]]:
     ]
 
 
-def visible_partitions(out_dir: str, cols: list[str] | None = None) -> list[dict]:
-    """``completed_partitions`` minus blocks inside INCOMPLETE append bands:
-    the read-side half of append atomicity.  An in-flight (or crashed)
-    append publishes sidecars per partition, but readers see none of them
-    until the append's completion marker flips — old rows only, then old
-    plus ALL new, never a torn middle.  Resume paths keep using
-    ``completed_partitions`` (they must see partial state to skip it)."""
-    rows = completed_partitions(out_dir, cols=cols)
-    bands = incomplete_append_bands(out_dir)
-    if not bands:
-        return rows
-    return [
-        r for r in rows
-        if not any(lo <= int(r["partition_id"]) < hi for lo, hi in bands)
-    ]
-
-
 def read_manifest(out_dir: str) -> dict:
     """rugo-parity surface: nested dict shaped like ``read_metadata``'s output
     (reference ``metadata_reader.pyx:102-174`` / ``README.md:166-200``) —
@@ -875,7 +921,7 @@ def read_manifest(out_dir: str) -> dict:
 # ranges stay tiny (dense bands) even at 10^6 partitions.
 #
 # Reads: `decode_table(..., snapshot_id=N)` plans only pids inside the
-# snapshot's ranges — both the driver-local and the distributed planner.
+# snapshot's ranges — `scan_specs` applies them, wherever planning runs.
 # Rollback: `rollback_to_snapshot` condemns every pid outside the target
 # ranges behind an atomic `_rollback.json` marker (the commit point — the
 # live view equals the target the instant the marker lands), then cleans up

@@ -86,9 +86,7 @@ def recluster_dataset(
         )
     payload = mf.read_schema_payload(src_dir) or {}
     size_col = payload.get("size_col")
-    rows = sorted(
-        mf.visible_partitions(src_dir), key=lambda r: int(r["partition_id"])
-    )
+    rows = mf.visible_partitions(src_dir)  # pid-sorted
     if not rows:
         raise ValueError(f"nothing to recluster: {src_dir} has no partitions")
     base_meta = [r for r in rows if int(r["partition_id"]) < mf.APPEND_BAND]

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 
@@ -24,3 +25,19 @@ def tmp_out(tmp_path):
     out = str(tmp_path / "encoded")
     yield out
     shutil.rmtree(out, ignore_errors=True)
+
+
+@pytest.fixture()
+def plan_on(monkeypatch):
+    """``with plan_on("driver"|"executors"):`` forces where decode_table and
+    metadata_agg plan, through their one switch threshold."""
+    from rugo_spark import engine
+
+    @contextlib.contextmanager
+    def force(side: str):
+        threshold = {"driver": 1 << 62, "executors": -1}[side]
+        with monkeypatch.context() as m:
+            m.setattr(engine, "_DISTRIBUTED_PLAN_THRESHOLD", threshold)
+            yield
+
+    return force

@@ -35,7 +35,7 @@ def _mk(spark, out, n=400, parts=8, lo=0):
     return df
 
 
-def test_consolidate_roundtrip_local_and_distributed(spark, tmp_path):
+def test_consolidate_roundtrip_local_and_distributed(spark, tmp_path, plan_on):
     out = str(tmp_path / "ds")
     _mk(spark, out)
     before = decode_table(spark, out).orderBy("doc_id").collect()
@@ -46,12 +46,12 @@ def test_consolidate_roundtrip_local_and_distributed(spark, tmp_path):
     assert mf.loose_sidecar_names(out) == []
     assert len(mf.segment_pids(out)) == 8
 
-    for plan in ("local", "distributed"):
-        got = decode_table(spark, out, plan=plan).orderBy("doc_id").collect()
-        assert got == before, plan
-    for dist in (False, True):
-        m = metadata_agg(spark, out, ["doc_id", "n_tok"], distributed=dist).first()
-        assert m == meta_before
+    for side in ("driver", "executors"):
+        with plan_on(side):
+            got = decode_table(spark, out).orderBy("doc_id").collect()
+            assert got == before, side
+            m = metadata_agg(spark, out, ["doc_id", "n_tok"]).first()
+            assert m == meta_before
     # bloom point lookup plans through segment rows
     assert decode_table(spark, out, filters=[("doc_id", "=", "123")]).count() == 1
 
@@ -85,7 +85,7 @@ def test_consolidate_incremental_segments_and_append(spark, tmp_path):
     }
 
 
-def test_incomplete_append_band_stays_loose_and_invisible(spark, tmp_path):
+def test_incomplete_append_band_stays_loose_and_invisible(spark, tmp_path, plan_on):
     out = str(tmp_path / "ds")
     _mk(spark, out)
     # fake a crashed foreign append: reserved band, two sidecars landed,
@@ -105,8 +105,9 @@ def test_incomplete_append_band_stays_loose_and_invisible(spark, tmp_path):
     assert len(mf.loose_sidecar_names(out)) == 2
     # readers see only the visible 400 rows, from the segment
     assert decode_table(spark, out).count() == 400
-    assert decode_table(spark, out, plan="distributed").count() == 400
-    assert metadata_agg(spark, out, ["n_tok"], distributed=True).first()["n_rows"] == 400
+    with plan_on("executors"):
+        assert decode_table(spark, out).count() == 400
+        assert metadata_agg(spark, out, ["n_tok"]).first()["n_rows"] == 400
 
 
 def test_crash_window_orphan_segment_is_invisible_then_gcd(spark, tmp_path):
@@ -124,7 +125,7 @@ def test_crash_window_orphan_segment_is_invisible_then_gcd(spark, tmp_path):
     assert decode_table(spark, out).count() == 400
 
 
-def test_crash_window_catalog_committed_sidecars_remain(spark, tmp_path):
+def test_crash_window_catalog_committed_sidecars_remain(spark, tmp_path, plan_on):
     out = str(tmp_path / "ds")
     _mk(spark, out)
     rows = {int(r["partition_id"]): r for r in mf.completed_partitions(out)}
@@ -134,8 +135,9 @@ def test_crash_window_catalog_committed_sidecars_remain(spark, tmp_path):
     for r in rows.values():
         mf.write_sidecar(out, r)
     # no pid is planned twice — row count identical on both plan paths
-    assert decode_table(spark, out, plan="local").count() == 400
-    assert decode_table(spark, out, plan="distributed").count() == 400
+    for side in ("driver", "executors"):
+        with plan_on(side):
+            assert decode_table(spark, out).count() == 400
     assert len(mf.completed_partitions(out)) == 8
     # re-consolidation deletes the redundant leftovers without creating a
     # pid-overlapping second segment
@@ -146,7 +148,7 @@ def test_crash_window_catalog_committed_sidecars_remain(spark, tmp_path):
 
 
 @pytest.mark.parametrize("crash_at", ["before_catalog", "mid_delete"])
-def test_sigkill_mid_consolidation_then_recover(spark, tmp_path, crash_at):
+def test_sigkill_mid_consolidation_then_recover(spark, tmp_path, crash_at, plan_on):
     """True process death injected at the two risky protocol points:
     right before the catalog commit (segment file exists, uncataloged) and
     midway through sidecar deletion (catalog committed, half the loose
@@ -181,8 +183,9 @@ os._exit(0)  # never reached
 
     # crashed state must read exactly
     assert len(mf.completed_partitions(out)) == 8
-    assert decode_table(spark, out, plan="local").count() == 400
-    assert decode_table(spark, out, plan="distributed").count() == 400
+    for side in ("driver", "executors"):
+        with plan_on(side):
+            assert decode_table(spark, out).count() == 400
 
     # recovery: one more consolidation converges to a clean state
     mf.consolidate_manifest(out)
@@ -237,7 +240,7 @@ def test_clear_manifest_wipes_segments(spark, tmp_path):
     assert not os.path.exists(os.path.join(out, mf.SEGMENTS_FILE))
 
 
-def test_metadata_agg_summary_fast_path_matches_full(spark, tmp_path):
+def test_metadata_agg_summary_fast_path_matches_full(spark, tmp_path, plan_on):
     out = str(tmp_path / "ds")
     _mk(spark, out)
     full = metadata_agg(spark, out, ["doc_id", "n_tok"]).first()
@@ -255,7 +258,8 @@ def test_metadata_agg_summary_fast_path_matches_full(spark, tmp_path):
     append_table(app, out, sort_key="doc_id", size_col="n_tok")
     m = metadata_agg(spark, out, ["n_tok"]).first()
     assert m["n_rows"] == 450
-    exact = metadata_agg(spark, out, ["n_tok"], distributed=True).first()
+    with plan_on("executors"):
+        exact = metadata_agg(spark, out, ["n_tok"]).first()
     assert m == exact
 
 
@@ -281,3 +285,15 @@ def test_corrupt_catalog_raises_not_silent_subset(spark, tmp_path):
         mf.completed_partitions(out)
     with pytest.raises(ValueError, match="corrupt manifest-segment catalog"):
         decode_table(spark, out).count()
+
+
+def test_plan_switch_weighs_segment_rows_by_what_the_scan_reads():
+    from rugo_spark.engine import _DISTRIBUTED_PLAN_THRESHOLD as limit
+    from rugo_spark.engine import _plan_on_executors
+
+    assert not _plan_on_executors(limit, 0, stats=False)
+    assert _plan_on_executors(limit + 1, 0, stats=True)
+    # 100k consolidated rows: decode plans on the driver (block paths
+    # only), a stats merge on executors (every row's stats JSON parsed)
+    assert not _plan_on_executors(0, 100_000, stats=False)
+    assert _plan_on_executors(0, 100_000, stats=True)

@@ -56,10 +56,12 @@ def test_metadata_agg_matches_scan(spark, doc_df, tmp_out):
     assert got["nulls_doc_id"] == 0
 
 
-def test_distributed_path_agrees_with_driver_path(spark, doc_df, tmp_out):
+def test_distributed_path_agrees_with_driver_path(spark, doc_df, tmp_out, plan_on):
     encode_table_maponly(doc_df, tmp_out, size_col="n_chars")
-    a = metadata_agg(spark, tmp_out, ["doc_id", "lang"], distributed=False).first()
-    b = metadata_agg(spark, tmp_out, ["doc_id", "lang"], distributed=True).first()
+    with plan_on("driver"):
+        a = metadata_agg(spark, tmp_out, ["doc_id", "lang"]).first()
+    with plan_on("executors"):
+        b = metadata_agg(spark, tmp_out, ["doc_id", "lang"]).first()
     assert a.asDict() == b.asDict()
 
 

@@ -89,34 +89,48 @@ def test_logical_types_on_own_tables():
     assert cols["l_quantity"]["type"] == "float64"
 
 
-def test_bloom_and_index_footer_fields():
-    """The three per-chunk fields pyarrow hides, recovered by the thrift-lite
-    footer scan (rugo parses them: metadata.cpp:536-581): bloom offset on the
-    reference's own bloom fixture, index_page_offset cross-checked against
-    DuckDB's parquet_metadata() on every fixture."""
-    import glob
+def test_bloom_and_index_footer_fields(spark, tmp_path):
+    """The per-chunk fields pyarrow hides, recovered by the thrift-lite
+    footer scan (rugo parses them: metadata.cpp:536-581), on a bloom
+    fixture written by Spark's parquet writer (pyarrow and DuckDB cannot
+    write blooms): the bloom range lies inside the file before the footer,
+    the bytes entry point agrees, and index_page_offset matches DuckDB's
+    parquet_metadata()."""
+    import struct
 
     import duckdb
 
     from rugo_spark.parquet_meta import read_metadata, read_metadata_from_bytes
     from rugo_spark.thrift_lite import file_column_extras
 
-    p = "/root/reference/tests/data/data_index_bloom_encoding_stats.parquet"
-    md = read_metadata(p)
-    col = md["row_groups"][0]["columns"][0]
-    assert col["bloom_offset"] == 192  # non-None: the writer stored a bloom
+    out = str(tmp_path / "bloom")
+    (
+        spark.range(0, 2000).selectExpr("id", "cast(id * 7 as string) s")
+        .coalesce(1).write
+        .option("parquet.bloom.filter.enabled#s", "true")
+        .option("parquet.enable.dictionary", "false")
+        .parquet(out)
+    )
+    (p,) = glob.glob(os.path.join(out, "*.parquet"))
     with open(p, "rb") as f:
-        assert read_metadata_from_bytes(f.read()) == md
+        data = f.read()
+    footer_start = len(data) - 8 - struct.unpack("<I", data[-8:-4])[0]
 
-    con = duckdb.connect()
-    for path in sorted(glob.glob("/root/reference/tests/data/*.parquet")):
-        extras = file_column_extras(path)  # must parse every footer
-        rows = con.execute(
-            f"SELECT row_group_id, column_id, index_page_offset "
-            f"FROM parquet_metadata('{path}') ORDER BY 1, 2"
-        ).fetchall()
-        for rg, ci, ipo in rows:
-            assert extras[rg][ci]["index_page_offset"] == ipo, path
+    md = read_metadata(p)
+    col = next(c for c in md["row_groups"][0]["columns"] if c["name"] == "s")
+    assert col["bloom_offset"] is not None and col["bloom_length"] is not None
+    assert 4 <= col["bloom_offset"]
+    assert col["bloom_offset"] + col["bloom_length"] <= footer_start
+    assert read_metadata_from_bytes(data) == md
+
+    extras = file_column_extras(p)
+    rows = duckdb.connect().execute(
+        f"SELECT row_group_id, column_id, index_page_offset "
+        f"FROM parquet_metadata('{p}') ORDER BY 1, 2"
+    ).fetchall()
+    assert rows
+    for rg, ci, ipo in rows:
+        assert extras[rg][ci]["index_page_offset"] == ipo
 
 
 def test_thrift_lite_fuzz_roundtrip(tmp_path):

@@ -114,50 +114,26 @@ def test_clear_manifest_removes_append_markers(tmp_path):
 # the segment row (skip list) — distributed planning silently lost the pid.
 
 
-def test_iter_spec_rows_sidecar_falls_back_to_segment(tmp_path):
-    out = str(tmp_path / "ds")
-    _tiny_ds(out)
-    rows = {int(r["partition_id"]): r for r in mf.completed_partitions(out)}
-    mf.consolidate_manifest(out)
-    seg = mf.segment_catalog(out)[0]
-    seg_path = os.path.join(out, mf.SEGMENTS_DIR, seg["file"])
-    # sidecar file does NOT exist (consolidation deleted it) — the fallback
-    # must recover the row from the segment
-    spec = {
-        "kind": "sidecar",
-        "path": mf.sidecar_path(out, 1),
-        "pid": 1,
-        "fallback_segs": [seg_path],
-    }
-    got = list(mf.iter_spec_rows(spec))
-    assert len(got) == 1 and int(got[0]["partition_id"]) == 1
-    assert got[0]["checksum"] == rows[1]["checksum"]
-    # no fallback info → old semantics (partition counts as not-done)
-    assert list(mf.iter_spec_rows({"kind": "sidecar", "path": mf.sidecar_path(out, 1)})) == []
-
-
-def test_manifest_scan_specs_attach_fallbacks_for_overlap(spark, tmp_path):
-    from rugo_spark.engine import _manifest_scan_specs, _plan_df_distributed
-
+def test_manifest_scan_specs_attach_fallbacks_for_overlap(tmp_path):
     out = str(tmp_path / "ds")
     _tiny_ds(out)
     rows = {int(r["partition_id"]): r for r in mf.completed_partitions(out)}
     mf.consolidate_manifest(out)
     # crash-window overlap: pid 1 loose again AND in the segment
     mf.write_sidecar(out, rows[1])
-    specs, n_loose = _manifest_scan_specs(out)
-    # r6 chunk form: loose sidecars ship as name chunks; the crash-window
-    # fallback resolves per-name from the chunk's segment catalog ranges
+    specs = mf.scan_specs(out)
+    # loose sidecars ship as name chunks; the crash-window fallback
+    # resolves per-name from the chunk's segment catalog ranges
     sidecars = [s for s in specs if s["kind"] == "sidecars"]
-    assert len(sidecars) == 1 and n_loose == 1
+    assert len(sidecars) == 1
     assert sidecars[0]["names"] == [os.path.basename(mf.sidecar_path(out, 1))]
     assert sidecars[0]["catalog"]
-    # delete the loose file (simulating consolidation step-5 racing the
-    # plan): the distributed plan must still see all 3 pids exactly once
+    # delete the loose file AFTER the specs were built (consolidation
+    # step 5 racing the plan): expanding those specs must still yield all
+    # 3 pids exactly once — pid 1 from the torn-file fallback, since every
+    # segment spec skips it
     os.remove(mf.sidecar_path(out, 1))
-    plan = _plan_df_distributed(spark, out, None).collect()
-    # NOTE: specs were built before the delete; the executor recovers pid 1
-    got = sorted(r["block_path"] for r in plan)
+    got = sorted(r["block_path"] for s in specs for r in mf.iter_spec_rows(s))
     assert got == ["/v/0.rgb", "/v/1.rgb", "/v/2.rgb"]
 
 

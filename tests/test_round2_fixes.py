@@ -211,7 +211,7 @@ def test_decimal_table_roundtrip_and_stats_codec(spark, tmp_out):
 
 # ------------------------------------------------------------ planning modes
 
-def test_decode_distributed_planning_matches_local(spark, tmp_out):
+def test_decode_distributed_planning_matches_local(spark, tmp_out, plan_on):
     """Executor-side manifest planning (the 10^6-block path) must agree with
     the driver-loop planner: same rows, same filter pruning."""
     from rugo_spark.engine import decode_table, encode_table
@@ -220,16 +220,18 @@ def test_decode_distributed_planning_matches_local(spark, tmp_out):
     df = spark.createDataFrame(pdf)
     encode_table(df, tmp_out, key_col="k", num_partitions=16)
 
-    a = decode_table(spark, tmp_out, plan="local").toPandas().sort_values("k")
-    b = decode_table(spark, tmp_out, plan="distributed").toPandas().sort_values("k")
+    with plan_on("driver"):
+        a = decode_table(spark, tmp_out).toPandas().sort_values("k")
+        fa = decode_table(spark, tmp_out, filters=[("k", "=", "k00042")]).collect()
+    with plan_on("executors"):
+        b = decode_table(spark, tmp_out).toPandas().sort_values("k")
+        fb = decode_table(spark, tmp_out, filters=[("k", "=", "k00042")]).collect()
     assert a["v"].tolist() == b["v"].tolist()
-
-    fa = decode_table(spark, tmp_out, plan="local", filters=[("k", "=", "k00042")]).collect()
-    fb = decode_table(spark, tmp_out, plan="distributed", filters=[("k", "=", "k00042")]).collect()
     assert [r["v"] for r in fa] == [r["v"] for r in fb] == [42]
 
     # checksum verification flows through the distributed plan too
-    assert decode_table(spark, tmp_out, plan="distributed", verify_checksums=True).count() == 2000
+    with plan_on("executors"):
+        assert decode_table(spark, tmp_out, verify_checksums=True).count() == 2000
 
 
 # ------------------------------------------------------------ clustering

@@ -54,7 +54,7 @@ def test_plain_append_refuses_new_columns(spark, tmp_path, evo_inputs):
         eng.append_table(db, out)
 
 
-def test_evolved_decode_and_projections(spark, tmp_path, evo_inputs):
+def test_evolved_decode_and_projections(spark, tmp_path, evo_inputs, plan_on):
     out = str(tmp_path / "ds")
     _setup(spark, out, evo_inputs)
     full = eng.decode_table(spark, out)
@@ -70,12 +70,13 @@ def test_evolved_decode_and_projections(spark, tmp_path, evo_inputs):
     # the exact re-apply drops their NULL rows
     assert eng.decode_table(spark, out, filters=[("quality", ">", 0.0)]).count() == 100
     # distributed plan path agrees
-    assert eng.decode_table(spark, out, plan="distributed").filter(
-        F.col("quality").isNull()
-    ).count() == 400
+    with plan_on("executors"):
+        assert eng.decode_table(spark, out).filter(
+            F.col("quality").isNull()
+        ).count() == 400
 
 
-def test_evolved_metadata_nulls_three_paths(spark, tmp_path, evo_inputs):
+def test_evolved_metadata_nulls_three_paths(spark, tmp_path, evo_inputs, plan_on):
     out = str(tmp_path / "ds")
     _setup(spark, out, evo_inputs)
     # local row-scan path
@@ -87,7 +88,8 @@ def test_evolved_metadata_nulls_three_paths(spark, tmp_path, evo_inputs):
     r = eng.metadata_agg(spark, out, columns=["quality"]).collect()[0]
     assert r["nulls_quality"] == 400
     # distributed pre-merge path
-    r = eng.metadata_agg(spark, out, columns=["quality"], distributed=True).collect()[0]
+    with plan_on("executors"):
+        r = eng.metadata_agg(spark, out, columns=["quality"]).collect()[0]
     assert r["nulls_quality"] == 400
 
 

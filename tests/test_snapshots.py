@@ -64,7 +64,7 @@ def _encode_and_append(spark, out, two_inputs):
     return a_ids, b_ids
 
 
-def test_snapshot_log_and_time_travel(spark, tmp_path, two_inputs):
+def test_snapshot_log_and_time_travel(spark, tmp_path, two_inputs, plan_on):
     out = str(tmp_path / "ds")
     a_ids, b_ids = _encode_and_append(spark, out, two_inputs)
     log = mf.snapshot_log(out)
@@ -76,7 +76,8 @@ def test_snapshot_log_and_time_travel(spark, tmp_path, two_inputs):
     # current read vs as-of snapshot 1, on BOTH plan paths
     assert _ids(eng.decode_table(spark, out)) == a_ids | b_ids
     assert _ids(eng.decode_table(spark, out, snapshot_id=1)) == a_ids
-    assert _ids(eng.decode_table(spark, out, snapshot_id=1, plan="distributed")) == a_ids
+    with plan_on("executors"):
+        assert _ids(eng.decode_table(spark, out, snapshot_id=1)) == a_ids
     assert _ids(eng.decode_table(spark, out, snapshot_id=2)) == a_ids | b_ids
     # stats as of snapshot 1 (summary fast path must not be used)
     row = eng.metadata_agg(spark, out, columns=["n_chars"], snapshot_id=1).collect()[0]
@@ -84,7 +85,8 @@ def test_snapshot_log_and_time_travel(spark, tmp_path, two_inputs):
     # after consolidation the snapshot read plans from segment slices
     mf.consolidate_manifest(out)
     assert _ids(eng.decode_table(spark, out, snapshot_id=1)) == a_ids
-    assert _ids(eng.decode_table(spark, out, snapshot_id=1, plan="distributed")) == a_ids
+    with plan_on("executors"):
+        assert _ids(eng.decode_table(spark, out, snapshot_id=1)) == a_ids
     row = eng.metadata_agg(spark, out, columns=["n_chars"], snapshot_id=1).collect()[0]
     assert row["n_rows"] == 400
     # snapshots_df mirrors the log
@@ -141,7 +143,7 @@ def test_rollback_to_latest_is_noop(spark, tmp_path, two_inputs):
     assert len(mf.snapshot_log(out)) == 2
 
 
-def test_mid_rollback_mask_and_resume(spark, tmp_path, two_inputs):
+def test_mid_rollback_mask_and_resume(spark, tmp_path, two_inputs, plan_on):
     """Window A: the marker just landed, zero cleanup ran.  Readers must
     already see exactly the target snapshot; writers must refuse; resuming
     the rollback completes cleanup."""
@@ -152,7 +154,8 @@ def test_mid_rollback_mask_and_resume(spark, tmp_path, two_inputs):
         json.dump({"ranges": keep, "snapshot_id": 1}, f)
     # masked reads: both plan paths, manifest_df, metadata_agg
     assert _ids(eng.decode_table(spark, out)) == a_ids
-    assert _ids(eng.decode_table(spark, out, plan="distributed")) == a_ids
+    with plan_on("executors"):
+        assert _ids(eng.decode_table(spark, out)) == a_ids
     assert eng.metadata_agg(spark, out, columns=["n_chars"]).collect()[0]["n_rows"] == 400
     with pytest.raises(ValueError, match="in-progress rollback"):
         eng.append_table(two_inputs[1], out)
@@ -177,7 +180,7 @@ mf.rollback_to_snapshot({out_dir!r}, 1)
 """
 
 
-def test_sigkill_between_catalog_swap_and_unmask(spark, tmp_path, two_inputs):
+def test_sigkill_between_catalog_swap_and_unmask(spark, tmp_path, two_inputs, plan_on):
     """Window B: rollback dies AFTER committing the rewritten catalog but
     BEFORE removing the marker (dirty segment files still on disk).  The
     view must stay rolled back, and a resume must finish cleanly."""
@@ -198,7 +201,8 @@ def test_sigkill_between_catalog_swap_and_unmask(spark, tmp_path, two_inputs):
     res = mf.rollback_to_snapshot(out, 1)
     assert not os.path.exists(os.path.join(out, mf.ROLLBACK_MARKER))
     assert _ids(eng.decode_table(spark, out)) == a_ids
-    assert _ids(eng.decode_table(spark, out, plan="distributed")) == a_ids
+    with plan_on("executors"):
+        assert _ids(eng.decode_table(spark, out)) == a_ids
     # no orphan segment files survive (the dirty ones were deleted on resume)
     cataloged = {e["file"] for e in mf.segment_catalog(out)}
     on_disk = set(os.listdir(os.path.join(out, mf.SEGMENTS_DIR)))
