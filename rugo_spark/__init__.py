@@ -15,7 +15,9 @@ The encoding vocabulary mirrors the reference's enum surface
 
 __version__ = "0.1.0"
 
-from rugo_spark.session import get_spark  # noqa: F401
+from rugo_spark.session import get_spark, install_lazy_zip_invalidation  # noqa: F401
+
+install_lazy_zip_invalidation()
 
 
 def __getattr__(name: str):

@@ -3324,7 +3324,8 @@ def _decode_plan(
         return None, names
     if num_tasks is None:
         # one task per block is right for few big blocks, pathological
-        # for many small ones (task overhead ~10-20 ms): target ≥4 waves
+        # for many small ones (a Python task holds its slot ~50 ms, ~250 ms
+        # without session.install_lazy_zip_invalidation): target ≥4 waves
         # per core OR ~32 MB per task, whichever gives more tasks
         total_bytes = sum(int(r.get("output_bytes") or 0) for r in rows)
         num_tasks = min(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -59,3 +60,42 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def install_lazy_zip_invalidation() -> None:
+    """Backport CPython 3.13's lazy zip-directory invalidation into a PySpark
+    worker.
+
+    pyspark's ``setup_spark_files`` calls ``importlib.invalidate_caches()``
+    before every task; below 3.13 that makes each ``zipimporter`` on
+    ``sys.path_importer_cache`` (~16 over ``pyspark.zip``) re-read its
+    archive's directory (1,328 entries), which cost more per task than the
+    codec kernels.  As in 3.13, ``invalidate_caches`` only drops the archive
+    from ``zipimport._zip_directory_cache`` and importers read their file
+    table through that cache, so an archive is re-read at most once, on next
+    use.  The cache re-reads a dropped archive itself, so ``pkgutil``, which
+    indexes it directly, keeps working.  Active only inside a PySpark worker
+    (``PYTHON_WORKER_FACTORY_SECRET`` set) and only below 3.13.
+    """
+    if sys.version_info >= (3, 13) or not os.environ.get("PYTHON_WORKER_FACTORY_SECRET"):
+        return
+    import zipimport
+
+    class DirectoryCache(dict):
+        def __missing__(self, archive):
+            self[archive] = found = zipimport._read_directory(archive)
+            return found
+
+    def files(self):
+        try:
+            return zipimport._zip_directory_cache[self.archive]
+        except zipimport.ZipImportError:  # the archive is gone or broken
+            return {}
+
+    def invalidate_caches(self):
+        zipimport._zip_directory_cache.pop(self.archive, None)
+
+    zipimport._zip_directory_cache = DirectoryCache(zipimport._zip_directory_cache)
+    # __init__ fills the cache before it assigns _files: the setter drops it
+    zipimport.zipimporter._files = property(files, lambda self, value: None)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
