@@ -17,12 +17,7 @@ import pyarrow as pa
 _HDR = struct.Struct("<BQ")
 
 RAW, ZSTD, LZ4, GZIP, SNAPPY = 0, 1, 2, 3, 4
-_NAMES = {RAW: "uncompressed", ZSTD: "zstd", LZ4: "lz4", GZIP: "gzip", SNAPPY: "snappy"}
 _PA = {ZSTD: "zstd", LZ4: "lz4", GZIP: "gzip", SNAPPY: "snappy"}
-
-
-def codec_name(codec_id: int) -> str:
-    return _NAMES[codec_id]
 
 
 def wrap(payload: bytes, codec: int = ZSTD, auto: bool = True) -> bytes:

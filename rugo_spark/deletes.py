@@ -62,6 +62,17 @@ def encode_positions(positions: np.ndarray, n_rows: int) -> tuple[str, str]:
     return enc, base64.b64encode(comp).decode()
 
 
+def mask_entry(pid: int, positions: np.ndarray, n_rows: int, deleted_tokens: int) -> dict:
+    """One delete-file entry: block ``pid``'s sorted deleted ``positions``
+    (of ``n_rows``) in their smallest encoding, with the deleted row and
+    token counts."""
+    enc, data = encode_positions(positions, n_rows)
+    return {
+        "pid": int(pid), "n_rows": int(n_rows), "n_deleted": int(len(positions)),
+        "deleted_tokens": int(deleted_tokens), "enc": enc, "data": data,
+    }
+
+
 def decode_positions(enc: str, data: str, n_rows: int) -> np.ndarray:
     """Inverse of :func:`encode_positions` → sorted uint32 positions."""
     if enc == "all":
@@ -271,8 +282,7 @@ def consolidate_delete_files(out_dir: str) -> dict:
 
     from rugo_spark import manifest as mf
 
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         names = visible_delete_files(out_dir)
         if len(names) < 2:
             return {"files_before": len(names), "files_after": len(names),
@@ -296,12 +306,9 @@ def consolidate_delete_files(out_dir: str) -> dict:
         entries = []
         for pid in sorted(per_pid):
             m = per_pid[pid]
-            pos = union_positions(m["raw"])
-            enc, data = encode_positions(pos, m["n_rows"])
-            entries.append({
-                "pid": pid, "n_rows": m["n_rows"], "n_deleted": int(len(pos)),
-                "deleted_tokens": int(m["tokens"]), "enc": enc, "data": data,
-            })
+            entries.append(
+                mask_entry(pid, union_positions(m["raw"]), m["n_rows"], m["tokens"])
+            )
         fp = hashlib.sha256("\n".join(names).encode()).hexdigest()[:16]
         new_name = f"delete-consolidated-{fp}.json"
         write_delete_file(out_dir, new_name, entries,
@@ -340,8 +347,3 @@ def consolidate_delete_files(out_dir: str) -> dict:
             "n_deleted": int(sum(e["n_deleted"] for e in entries)),
             "snapshot_id": int(entry["id"]) if entry else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass

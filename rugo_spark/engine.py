@@ -1214,6 +1214,29 @@ _DELETE_ENTRY_DDL = (
 # manifest fields a DML candidate scan needs: block-skip stats + bloom
 _CANDIDATE_COLS = ["partition_id", "block_path", "n_rows", "codecs", "bloom_col", "bloom"]
 
+_PREDICATE_OPS = ("=", "<", "<=", ">", ">=", "in", "isnull", "notnull")
+
+
+def _check_predicate(filters: list[tuple], columns, what: str) -> None:
+    """Refuse a DML predicate on an unknown column or with an op the mask
+    scan cannot evaluate."""
+    for c, op, _v in filters:
+        if c not in columns:
+            raise ValueError(f"unknown column {c!r} in {what} predicate")
+        if op not in _PREDICATE_OPS:
+            raise ValueError(f"unsupported {what} predicate op {op!r}")
+
+
+def _filters_json(filters: list[tuple]) -> list[list]:
+    """JSON-safe rendering of a predicate for every serialization point
+    (fingerprint, delete file, snapshot entry) — retention deletes carry
+    date/timestamp/Decimal values, which json.dumps rejects raw.  The
+    EVALUATION still uses the raw values (pa.scalar typed to the column)."""
+    return [
+        [c, op, v if isinstance(v, (int, float, str, bool, type(None))) else str(v)]
+        for c, op, v in filters
+    ]
+
 
 def _outside_band(base: int | None) -> list | None:
     """Keep ranges excluding a DML's own append band (None: no restriction)."""
@@ -1222,103 +1245,124 @@ def _outside_band(base: int | None) -> list | None:
     return [[0, base], [base + APPEND_BAND, 1 << 62]]
 
 
-def _predicate_mask_entries(
+def _own_band(out_dir: str, fp: str) -> int | None:
+    """Base of the append band an UPDATE/MERGE with fingerprint ``fp``
+    already reserved (a resumed or re-run call), else None.  Its rows are
+    that operation's replacements: they match by construction, and
+    re-masking them (under the same deterministic file name) would
+    overwrite the original masks and resurface the replaced rows."""
+    return next(
+        (
+            int(m["base"])
+            for m in mf.append_reservations(out_dir)
+            if m.get("fingerprint") == fp and int(m.get("base", -1)) >= 0
+        ),
+        None,
+    )
+
+
+def _candidate_scan(
     spark: SparkSession,
     out_dir: str,
     filters: list[tuple],
-    size_col: str | None,
-    prior_files: list[str],
-    exclude_base: int | None = None,
-) -> tuple[list[dict], list[int]]:
-    """The predicate-delete kernel shared by ``delete_where`` and
-    ``update_where``: min/max/bloom-pruned candidate blocks → ONE read of
-    the predicate (+size) columns per block → per-block position sets,
-    already-deleted positions subtracted.  Returns ``(entries,
-    candidate_pids)`` — only kilobyte entries reach the driver.
-    ``exclude_base``: an UPDATE's own append band (its replacement rows
-    match the predicate by construction and must never be re-masked)."""
+    exclude_base: int | None,
+    emit,
+    out_schema,
+):
+    """The mask scan of every DML (``delete_where``, ``delete_keys``,
+    ``update_where``, ``merge_table``): min/max/bloom-pruned candidate
+    blocks → ONE read of the predicate (+ recorded ``size_col``) columns
+    per block, with NO stripe skipping (positions are block-absolute) → the
+    positions of LIVE rows matching the ANDed ``filters``, already-deleted
+    positions subtracted so repeats are no-ops and files stay disjoint.
+
+    ``emit(pid, tbl, pos, n_rows, sz)`` turns one block's matches (sorted
+    uint32 ``pos``; ``sz`` their ``size_col`` values as float64, 0 where
+    null or without a size column) into RecordBatches of ``out_schema``
+    inside the same ``mapInArrow`` task, so only what the caller keeps
+    leaves it.
+    ``exclude_base``: the caller's own append band (:func:`_own_band`).
+    Returns ``(DataFrame or None when no block is a candidate, sorted
+    candidate pids)``."""
+    from pyspark.sql.types import StructType
+
     from rugo_spark import deletes as dl
 
     arrow_schema, spark_schema_json = mf.read_schema(out_dir)
-    from pyspark.sql.types import StructType as _ST
-
-    filters = _normalize_temporal_filters(_ST.fromJson(spark_schema_json), filters)
-    payload_schema = mf.read_schema_payload(out_dir) or {}
-    if size_col is None:
-        size_col = payload_schema.get("size_col")
+    filters = _normalize_temporal_filters(StructType.fromJson(spark_schema_json), filters)
     cands, _ = plan(out_dir, _CANDIDATE_COLS, filters, _outside_band(exclude_base))
     pids = sorted(int(r["partition_id"]) for r in cands)
     if not cands:
-        return [], pids
-    prior_bc = spark.sparkContext.broadcast(dl.load_raw(out_dir, prior_files))
+        return None, pids
+    prior_bc = spark.sparkContext.broadcast(
+        dl.load_raw(out_dir, dl.visible_delete_files(out_dir))
+    )
     schema_bytes = arrow_schema.serialize().to_pybytes()
-    need_cols = sorted({c for c, _, _ in filters})
+    size_col = (mf.read_schema_payload(out_dir) or {}).get("size_col")
     tok_col = size_col if size_col in arrow_schema.names else None
-    decode_cols = sorted(set(need_cols) | ({tok_col} if tok_col else set()))
+    decode_cols = sorted({c for c, _, _ in filters} | ({tok_col} if tok_col else set()))
+    src = _spec_src_df(
+        spark,
+        pid=[int(r["partition_id"]) for r in cands],
+        block_path=[r["block_path"] for r in cands],
+    )
 
-    import pandas as pd
-
-    src = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "pid": [int(r["partition_id"]) for r in cands],
-                "block_path": [r["block_path"] for r in cands],
-            }
-        )
-    ).repartition(min(len(cands), spark.sparkContext.defaultParallelism * 4))
-
-    def masker(batches):
+    def scan(batches):
         import numpy as np
+        import pyarrow.compute as pc
 
         schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
         for batch in batches:
-            out = []
-            pids_ = batch.column(0).to_pylist()
-            paths = batch.column(1).to_pylist()
-            for pid, path in zip(pids_, paths):
-                # ONE read of the predicate (+size) columns; NO stripe
-                # skipping: positions are block-absolute
+            for pid, path in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 tbl = pa.Table.from_batches(
                     list(read_block_file(path, schema, decode_cols, None))
                 )
-                matched, n_rows = _predicate_positions(tbl.to_batches(), filters)
-                prior_entries = prior_bc.value.get(int(pid))
-                if prior_entries is not None and len(matched):
-                    matched = np.setdiff1d(
-                        matched, dl.union_positions(prior_entries)
-                    ).astype(np.uint32)
-                if not len(matched):
+                pos, n_rows = _predicate_positions(tbl.to_batches(), filters)
+                prior = prior_bc.value.get(int(pid))
+                if prior is not None and len(pos):
+                    pos = np.setdiff1d(pos, dl.union_positions(prior)).astype(np.uint32)
+                if not len(pos):
                     continue
-                dtok = 0
-                if tok_col is not None:
-                    sizes = tbl.column(tok_col).to_numpy(zero_copy_only=False)
-                    dtok = int(np.nansum(sizes[matched].astype("float64")))
-                enc, data = dl.encode_positions(matched, n_rows)
-                out.append(
-                    {
-                        "pid": int(pid),
-                        "n_rows": int(n_rows),
-                        "n_deleted": int(len(matched)),
-                        "deleted_tokens": dtok,
-                        "enc": enc,
-                        "data": data,
-                    }
+                sz = (
+                    np.zeros(len(pos))
+                    if tok_col is None
+                    else pc.fill_null(
+                        pc.cast(tbl.column(tok_col).take(pos), pa.float64()), 0.0
+                    ).to_numpy()
                 )
-            if out:
-                yield pa.RecordBatch.from_pylist(out)
+                yield from emit(int(pid), tbl, pos, n_rows, sz)
 
-    entries = [
-        {
-            "pid": int(r["pid"]),
-            "n_rows": int(r["n_rows"]),
-            "n_deleted": int(r["n_deleted"]),
-            "deleted_tokens": int(r["deleted_tokens"]),
-            "enc": r["enc"],
-            "data": r["data"],
-        }
-        for r in src.mapInArrow(masker, _DELETE_ENTRY_DDL).collect()
-    ]
-    return entries, pids
+    return src.mapInArrow(scan, out_schema), pids
+
+
+def _entry_batch(pid, tbl, pos, n_rows, sz):
+    """``_candidate_scan`` emit of the predicate DMLs: one block's matches
+    folded to its delete-file entry in the scan task."""
+    from rugo_spark import deletes as dl
+
+    yield pa.RecordBatch.from_pylist([dl.mask_entry(pid, pos, n_rows, int(sz.sum()))])
+
+
+def _commit_delete(out_dir: str, name: str, entries: list[dict], predicate: list) -> dict:
+    """The commit of ``delete_where`` / ``delete_keys`` (caller holds the
+    writer lock): write delete file ``name``, publish it in ONE snapshot
+    entry, then drop orphaned delete files.  Returns ``{"n_deleted",
+    "n_blocks", "delete_file", "snapshot"}``."""
+    from rugo_spark import deletes as dl
+
+    if not entries:
+        return {"n_deleted": 0, "n_blocks": 0, "delete_file": None, "snapshot": None}
+    dl.write_delete_file(out_dir, name, entries, predicate)
+    snap = mf.commit_snapshot(
+        out_dir, "delete", extra={"predicate": predicate}, new_delete_files=[name]
+    )
+    dl.gc_orphans(out_dir)
+    return {
+        "n_deleted": sum(e["n_deleted"] for e in entries),
+        "n_blocks": len(entries),
+        "delete_file": name,
+        "snapshot": snap["id"] if snap else None,
+    }
 
 
 def delete_where(
@@ -1341,42 +1385,28 @@ def delete_where(
 
     Readers apply masks at decode; ``compact_dataset`` physically purges
     them; ``rollback_to_snapshot`` past the delete un-deletes.  Commit is
-    single-writer (consolidation lock) to keep concurrent delete commits
-    from double-counting overlaps.  Returns ``{"n_deleted", "n_blocks",
-    "delete_file", "snapshot"}``."""
+    single-writer (``manifest.writer_lock``) to keep concurrent delete
+    commits from double-counting overlaps.  Returns ``{"n_deleted",
+    "n_blocks", "delete_file", "snapshot"}``."""
+    import hashlib
+
     from rugo_spark import deletes as dl
+    from rugo_spark import evolution as evo
 
     if not filters:
         raise ValueError("delete_where requires at least one (col, op, value) filter")
     arrow_schema, _ = mf.read_schema(out_dir)
-    from rugo_spark import evolution as evo
-
     _view = evo.column_view(mf.read_schema_payload(out_dir))
     if _view:
         filters = evo.translate_filters(filters, evo.maps(_view)[0])
-    for c, op, _v in filters:
-        if c not in arrow_schema.names:
-            raise ValueError(f"unknown column {c!r} in delete predicate")
-        if op not in ("=", "<", "<=", ">", ">=", "in", "isnull", "notnull"):
-            raise ValueError(f"unsupported delete predicate op {op!r}")
-    payload_schema = mf.read_schema_payload(out_dir) or {}
-    size_col = payload_schema.get("size_col")
-    # JSON-safe rendering of the predicate for every serialization point
-    # (fingerprint, delete file, snapshot entry) — retention deletes carry
-    # date/timestamp/Decimal values, which json.dumps rejects raw.  The
-    # EVALUATION still uses the raw values (pa.scalar typed to the column).
-    filters_json = [
-        [c, op, v if isinstance(v, (int, float, str, bool, type(None))) else str(v)]
-        for c, op, v in filters
-    ]
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
-        import hashlib
-
+    _check_predicate(filters, arrow_schema.names, "delete")
+    filters_json = _filters_json(filters)
+    with mf.writer_lock(out_dir):
         prior_files = dl.visible_delete_files(out_dir)
-        entries, pids = _predicate_mask_entries(
-            spark, out_dir, filters, size_col, prior_files
+        scan, pids = _candidate_scan(
+            spark, out_dir, filters, None, _entry_batch, _DELETE_ENTRY_DDL
         )
+        entries = [r.asDict() for r in scan.collect()] if scan is not None else []
         fp = hashlib.sha1(
             json.dumps(
                 {
@@ -1386,29 +1416,7 @@ def delete_where(
                 }
             ).encode()
         ).hexdigest()
-        name = f"delete-{fp[:16]}.json"
-        summary = {"n_deleted": 0, "n_blocks": 0, "delete_file": None, "snapshot": None}
-        if not entries:
-            return summary
-        dl.write_delete_file(out_dir, name, entries, filters_json)
-        snap = mf.commit_snapshot(
-            out_dir,
-            "delete",
-            extra={"predicate": filters_json},
-            new_delete_files=[name],
-        )
-        dl.gc_orphans(out_dir)
-        return {
-            "n_deleted": sum(e["n_deleted"] for e in entries),
-            "n_blocks": len(entries),
-            "delete_file": name,
-            "snapshot": snap["id"] if snap else None,
-        }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
+        return _commit_delete(out_dir, f"delete-{fp[:16]}.json", entries, filters_json)
 
 
 def set_constraint(out_dir: str, name: str, expr: str) -> dict:
@@ -1510,41 +1518,35 @@ def _enforce_constraints(df: DataFrame, out_dir: str) -> None:
         )
 
 
-def _matched_key_mask_entries(
+def _key_mask_entries(
     spark: SparkSession,
     out_dir: str,
     df: DataFrame,
     key_col: str,
     exclude_base: int | None = None,
 ) -> list[dict]:
-    """Positions of LIVE rows in ``out_dir`` whose ``key_col`` value appears
-    in ``df`` — the delete side of a MERGE.  Fully distributed: candidate
-    blocks (min/max-pruned against the incoming key bounds) stream
-    ``(pid, pos, key)`` rows from one key-column decode; an inner join
-    against the incoming keys (Catalyst picks broadcast vs shuffle — the
-    incoming side of an upsert is usually small) keeps the matches; one
-    ``applyInArrow`` per pid folds them to compressed mask entries.  Only
-    the kilobyte entries ever reach the driver."""
+    """Mask entries for the LIVE rows of ``out_dir`` whose ``key_col``
+    value appears in ``df`` — the delete side of ``merge_table`` and
+    ``delete_keys``.  Fully distributed: :func:`_candidate_scan`, with the
+    incoming key bounds as its predicate, streams ``(pid, n_rows, pos, k,
+    sz)`` rows; an inner join against the incoming keys (Catalyst picks
+    broadcast vs shuffle — the incoming side of an upsert is usually small)
+    keeps the matches; one ``applyInArrow`` per pid folds them to mask
+    entries.  Only the kilobyte entries ever reach the driver."""
     import numpy as np
-    import pandas as pd
     import pyarrow.compute as pc
     import pyspark.sql.functions as F
     from pyspark.sql.types import StructType
 
     from rugo_spark import deletes as dl
+    from rugo_spark import evolution as evo
 
-    arrow_schema, _ = mf.read_schema(out_dir)
     payload_schema = mf.read_schema_payload(out_dir) or {}
     ds_json = payload_schema.get("spark_schema") or {}
     # rename evolution: ``key_col`` names the column in the CALLER's frame
     # (logical); the dataset side scans under the physical name
-    from rugo_spark import evolution as evo
-
     _view = evo.column_view(payload_schema)
-    ds_key = key_col
-    if _view:
-        _l2p, _ = evo.maps(_view)
-        ds_key = _l2p.get(key_col, key_col)
+    ds_key = evo.maps(_view)[0].get(key_col, key_col) if _view else key_col
     key_field = next(
         (f for f in ds_json.get("fields", []) if f["name"] == ds_key), None
     )
@@ -1559,86 +1561,19 @@ def _matched_key_mask_entries(
     ).first()
     if bounds["lo"] is None:
         return []
-    filters = [(ds_key, ">=", bounds["lo"]), (ds_key, "<=", bounds["hi"])]
-    # a resumed/re-run merge must never target its OWN band: those are the
-    # replacement rows it appended, and re-masking them (under the same
-    # deterministic file name) would overwrite the original masks and
-    # resurface the replaced rows
-    cands, _ = plan(out_dir, _CANDIDATE_COLS, filters, _outside_band(exclude_base))
-    if not cands:
-        return []
-    prior_bc = spark.sparkContext.broadcast(
-        dl.load_raw(out_dir, dl.visible_delete_files(out_dir))
-    )
-    schema_bytes = arrow_schema.serialize().to_pybytes()
-    lo, hi = bounds["lo"], bounds["hi"]
-    size_col = payload_schema.get("size_col")
-    tok_col = size_col if size_col in arrow_schema.names else None
-    decode_cols = sorted({ds_key} | ({tok_col} if tok_col else set()))
-    k_type = arrow_schema.field(ds_key).type
 
-    src = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "pid": [int(r["partition_id"]) for r in cands],
-                "block_path": [r["block_path"] for r in cands],
-            }
+    def emit(pid, tbl, pos, n_rows, sz):
+        idx = pa.array(pos, type=pa.int64())
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.full(len(pos), pid, dtype=np.int64)),
+                pa.array(np.full(len(pos), n_rows, dtype=np.int64)),
+                idx,
+                pc.take(tbl.column(ds_key).combine_chunks(), idx),
+                pa.array(sz),
+            ],
+            names=["pid", "n_rows", "pos", "k", "sz"],
         )
-    ).repartition(min(len(cands), spark.sparkContext.defaultParallelism * 4))
-
-    def scanner(batches):
-        schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
-
-        def _flat(x, typ):
-            if isinstance(x, pa.ChunkedArray):
-                if x.num_chunks == 0:
-                    return pa.array([], type=typ)
-                x = x.combine_chunks()  # Array in pyarrow>=15, else 1-chunk
-                if isinstance(x, pa.ChunkedArray):
-                    x = x.chunk(0)
-            return x
-
-        for batch in batches:
-            for pid, path in zip(
-                batch.column(0).to_pylist(), batch.column(1).to_pylist()
-            ):
-                # ONE key-column read, NO stripe skipping (block-absolute pos)
-                tbl = pa.Table.from_batches(
-                    list(read_block_file(path, schema, decode_cols, None))
-                )
-                n_rows = tbl.num_rows
-                k = tbl.column(ds_key).combine_chunks()
-                keep = pc.fill_null(
-                    pc.and_(
-                        pc.greater_equal(k, pa.scalar(lo, type=k_type)),
-                        pc.less_equal(k, pa.scalar(hi, type=k_type)),
-                    ),
-                    False,
-                ).to_numpy(zero_copy_only=False).copy()
-                prior = prior_bc.value.get(int(pid))
-                if prior is not None:
-                    keep[dl.union_positions(prior)] = False  # already deleted
-                pos = np.nonzero(keep)[0]
-                if not len(pos):
-                    continue
-                idx = pa.array(pos, type=pa.int64())
-                sz = (
-                    pc.fill_null(
-                        pc.cast(pc.take(tbl.column(tok_col), idx), pa.int64()), 0
-                    )
-                    if tok_col is not None
-                    else pa.array(np.zeros(len(pos), dtype=np.int64))
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.full(len(pos), int(pid), dtype=np.int64)),
-                        pa.array(np.full(len(pos), n_rows, dtype=np.int64)),
-                        idx,
-                        _flat(pc.take(k, idx), k_type),
-                        _flat(sz, pa.int64()),
-                    ],
-                    names=["pid", "n_rows", "pos", "k", "sz"],
-                )
 
     scan_schema = StructType.fromJson(
         {
@@ -1648,45 +1583,33 @@ def _matched_key_mask_entries(
                 {"name": "n_rows", "type": "long", "nullable": False, "metadata": {}},
                 {"name": "pos", "type": "long", "nullable": False, "metadata": {}},
                 dict(key_field, name="k", metadata={}),
-                {"name": "sz", "type": "long", "nullable": True, "metadata": {}},
+                {"name": "sz", "type": "double", "nullable": False, "metadata": {}},
             ],
         }
     )
-    decoded = src.mapInArrow(scanner, scan_schema)
+    scan, _ = _candidate_scan(
+        spark, out_dir, [(ds_key, ">=", bounds["lo"]), (ds_key, "<=", bounds["hi"])],
+        exclude_base, emit, scan_schema,
+    )
+    if scan is None:
+        return []
     keys = df.select(F.col(key_col).alias("k")).distinct()
-    matched = decoded.join(keys, "k", "inner")
 
     def fold(tbl: pa.Table) -> pa.Table:
-        pid = int(tbl.column("pid")[0].as_py())
-        n_rows = int(tbl.column("n_rows")[0].as_py())
         pos = np.sort(
             tbl.column("pos").to_numpy(zero_copy_only=False).astype(np.uint32)
         )
-        enc, data = dl.encode_positions(pos, n_rows)
-        return pa.table(
-            {
-                "pid": pa.array([pid], type=pa.int64()),
-                "n_rows": pa.array([n_rows], type=pa.int64()),
-                "n_deleted": pa.array([len(pos)], type=pa.int64()),
-                "deleted_tokens": pa.array(
-                    [int(tbl.column("sz").to_numpy(zero_copy_only=False).sum())],
-                    type=pa.int64(),
-                ),
-                "enc": pa.array([enc]),
-                "data": pa.array([data]),
-            }
-        )
+        return pa.Table.from_pylist([
+            dl.mask_entry(
+                tbl.column("pid")[0].as_py(), pos, tbl.column("n_rows")[0].as_py(),
+                int(tbl.column("sz").to_numpy(zero_copy_only=False).sum()),
+            )
+        ])
 
     return [
-        {
-            "pid": int(r["pid"]),
-            "n_rows": int(r["n_rows"]),
-            "n_deleted": int(r["n_deleted"]),
-            "deleted_tokens": int(r["deleted_tokens"]),
-            "enc": r["enc"],
-            "data": r["data"],
-        }
-        for r in matched.groupBy("pid")
+        r.asDict()
+        for r in scan.join(keys, "k", "inner")
+        .groupBy("pid")
         .applyInArrow(fold, _DELETE_ENTRY_DDL)
         .collect()
     ]
@@ -1705,22 +1628,22 @@ def delete_keys(
     and read-side behavior as ``delete_where``.
 
     The key match is the MERGE's distributed kernel
-    (:func:`_matched_key_mask_entries`): min/max-pruned key-column scan
-    joined against the key set, per-block masks folded executor-side — so a
-    10⁶-id takedown against a 100-TB corpus reads one column of the
-    candidate blocks and commits kilobytes.  Idempotent: already-deleted
-    positions are subtracted, so re-running (or overlapping a prior
-    predicate delete) never double-counts.  Returns ``{"n_deleted",
-    "n_blocks", "delete_file", "snapshot"}``."""
+    (:func:`_key_mask_entries` over the DML mask scan
+    :func:`_candidate_scan`): min/max-pruned key-column scan joined against
+    the key set, per-block masks folded executor-side — so a 10⁶-id
+    takedown against a 100-TB corpus reads one column of the candidate
+    blocks and commits kilobytes.  Idempotent: already-deleted positions
+    are subtracted, so re-running (or overlapping a prior predicate delete)
+    never double-counts.  Returns ``{"n_deleted", "n_blocks",
+    "delete_file", "snapshot"}``."""
     import hashlib
 
     import pyspark.sql.functions as F
 
     from rugo_spark import deletes as dl
-
-    arrow_schema, _ = mf.read_schema(out_dir)
     from rugo_spark import evolution as evo
 
+    arrow_schema, _ = mf.read_schema(out_dir)
     _view = evo.column_view(mf.read_schema_payload(out_dir))
     if _view:
         _l2p, _ = evo.maps(_view)
@@ -1733,13 +1656,8 @@ def delete_keys(
     if key_col not in arrow_schema.names:
         raise ValueError(f"unknown delete key {key_col!r} for {out_dir}")
     src = keys_df.select(F.col(keys_df.columns[0]).alias(key_col)).distinct()
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
-        entries = _matched_key_mask_entries(spark, out_dir, src, key_col)
-        summary = {"n_deleted": 0, "n_blocks": 0, "delete_file": None,
-                   "snapshot": None}
-        if not entries:
-            return summary
+    with mf.writer_lock(out_dir):
+        entries = _key_mask_entries(spark, out_dir, src, key_col)
         # deterministic name: prior files + touched pids + the entry content
         # (the key SET itself may be huge; its effect — the masks — is the
         # identity that matters for resume overwrites)
@@ -1750,25 +1668,9 @@ def delete_keys(
                             for e in sorted(entries, key=lambda e: e["pid"])],
             }).encode()
         ).hexdigest()
-        name = f"delete-keys-{fp[:16]}.json"
-        dl.write_delete_file(out_dir, name, entries, ["keys", key_col])
-        snap = mf.commit_snapshot(
-            out_dir, "delete",
-            extra={"predicate": ["keys", key_col]},
-            new_delete_files=[name],
+        return _commit_delete(
+            out_dir, f"delete-keys-{fp[:16]}.json", entries, ["keys", key_col]
         )
-        dl.gc_orphans(out_dir)
-        return {
-            "n_deleted": sum(e["n_deleted"] for e in entries),
-            "n_blocks": len(entries),
-            "delete_file": name,
-            "snapshot": snap["id"] if snap else None,
-        }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def update_where(
@@ -1822,11 +1724,7 @@ def update_where(
         valid = set(arrow_schema.names)
         logical_order = list(arrow_schema.names)
         filters_phys = filters
-    for c, op, _v in filters:
-        if c not in valid:
-            raise ValueError(f"unknown column {c!r} in update predicate")
-        if op not in ("=", "<", "<=", ">", ">=", "in", "isnull", "notnull"):
-            raise ValueError(f"unsupported update predicate op {op!r}")
+    _check_predicate(filters, valid, "update")
     bad = [c for c in assignments if c not in valid]
     if bad:
         raise ValueError(
@@ -1834,8 +1732,7 @@ def update_where(
             "(use append_table(..., allow_new_columns=True) to evolve)"
         )
     size_col = payload_schema.get("size_col")
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         # matched rows, transformed — the append side.  Decoded under the
         # lock so the source snapshot matches the masks computed below.
         src = decode_table(spark, out_dir, filters=filters)
@@ -1871,28 +1768,15 @@ def update_where(
                 default=str,
             ).encode()
         ).hexdigest()
-        own_base = next(
-            (
-                int(m["base"])
-                for m in mf.append_reservations(out_dir)
-                if m.get("fingerprint") == fp and int(m.get("base", -1)) >= 0
-            ),
-            None,
+        scan, _ = _candidate_scan(
+            spark, out_dir, filters_phys, _own_band(out_dir, fp), _entry_batch,
+            _DELETE_ENTRY_DDL,
         )
-        prior_files = dl.visible_delete_files(out_dir)
-        entries, _pids = _predicate_mask_entries(
-            spark, out_dir, filters_phys, size_col, prior_files,
-            exclude_base=own_base,
-        )
-        summary = {"n_updated": 0, "delete_file": None, "snapshot": None}
+        entries = [r.asDict() for r in scan.collect()] if scan is not None else []
         if not entries:
-            return summary
+            return {"n_updated": 0, "delete_file": None, "snapshot": None}
         name = f"delete-update-{fp[:16]}.json"
-        filters_json = [
-            [c, op, v if isinstance(v, (int, float, str, bool, type(None))) else str(v)]
-            for c, op, v in filters
-        ]
-        dl.write_delete_file(out_dir, name, entries, ["update", filters_json])
+        dl.write_delete_file(out_dir, name, entries, ["update", _filters_json(filters)])
         append_table(
             src, out_dir, size_col=size_col,
             _ride_delete_files=[name], _snapshot_op="update", _fingerprint=fp,
@@ -1904,11 +1788,6 @@ def update_where(
             "delete_file": name,
             "snapshot": int(snap[-1]["id"]) if snap else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def merge_table(
@@ -1946,7 +1825,7 @@ def merge_table(
 
     spark = df.sparkSession
     arrow_schema, _ = mf.read_schema(out_dir)
-    # rename evolution: key_col is a LOGICAL name; _matched_key_mask_entries
+    # rename evolution: key_col is a LOGICAL name; _key_mask_entries
     # resolves the physical side itself, so validate against the view here
     from rugo_spark import evolution as evo
 
@@ -1960,18 +1839,9 @@ def merge_table(
         # or metadata_agg drifts from a scan after every merge
         size_col = (mf.read_schema_payload(out_dir) or {}).get("size_col")
     fp = _input_fingerprint(df)
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
-        own_base = next(
-            (
-                int(m["base"])
-                for m in mf.append_reservations(out_dir)
-                if m.get("fingerprint") == fp and int(m.get("base", -1)) >= 0
-            ),
-            None,
-        )
-        entries = _matched_key_mask_entries(
-            spark, out_dir, df, key_col, exclude_base=own_base
+    with mf.writer_lock(out_dir):
+        entries = _key_mask_entries(
+            spark, out_dir, df, key_col, exclude_base=_own_band(out_dir, fp)
         )
         name = None
         if entries:
@@ -1992,11 +1862,6 @@ def merge_table(
             "delete_file": name,
             "snapshot": int(snap[-1]["id"]) if snap else None,
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def encode_table(
@@ -2595,7 +2460,10 @@ def _metadata_partials_distributed(
     slices), merge it with ``merge_column_metas`` and emit ONE partial row
     each; the driver merges only #tasks rows — at 10⁵–10⁶ partitions it
     never holds more than task-count JSON documents."""
-    src = _spec_src_df(spark, mf.scan_specs(out_dir, _STATS_COLS, keep_ranges))
+    src = _spec_src_df(
+        spark,
+        spec=[json.dumps(x) for x in mf.scan_specs(out_dir, _STATS_COLS, keep_ranges)],
+    )
     want = set(cols)
 
     def merger(batches):
@@ -3258,13 +3126,14 @@ def _plan_cols(filters) -> list[str]:
     return ["block_path", "checksum"] + (["codecs", "bloom_col", "bloom"] if filters else [])
 
 
-def _spec_src_df(spark: SparkSession, specs: list[dict]):
+def _spec_src_df(spark: SparkSession, **cols: list):
+    """A task source frame: one row per unit of work (a candidate block, a
+    ~256-sidecar chunk, a segment row-group slice), one task per row up to
+    4 waves/core.  ``cols``: equal-length column lists."""
     import pandas as pd
 
-    pdf = pd.DataFrame({"spec": [json.dumps(s) for s in specs]})
-    # every spec is a real unit of work (a ~256-sidecar chunk or a segment
-    # row-group slice) — one task per spec up to 4 waves/core
-    n_tasks = max(1, min(len(specs), spark.sparkContext.defaultParallelism * 4))
+    pdf = pd.DataFrame(cols)
+    n_tasks = max(1, min(len(pdf), spark.sparkContext.defaultParallelism * 4))
     return spark.createDataFrame(pdf).repartition(n_tasks)
 
 
@@ -3277,7 +3146,8 @@ def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges
     in strings."""
     import pyarrow as _pa
 
-    src = _spec_src_df(spark, mf.scan_specs(out_dir, _plan_cols(filters), keep_ranges))
+    specs = mf.scan_specs(out_dir, _plan_cols(filters), keep_ranges)
+    src = _spec_src_df(spark, spec=[json.dumps(x) for x in specs])
 
     def planner(batches):
         for batch in batches:
@@ -3669,27 +3539,18 @@ def read_changes(
     if diff:
         rows_by_pid = mf.load_rows(out_dir, sorted(diff))
         schema_bytes = arrow_schema.serialize().to_pybytes()
-        import pandas as pd
-
+        pids = sorted(diff)
+        rows = [rows_by_pid[p] for p in pids]
         # positions ride COMPRESSED (pos32/bitmap/all, zstd'd) — a mass
         # retention delete of 1M-row blocks would otherwise put ~4 MB of
         # raw uint32 per block on the driver and in every task payload
-        enc_specs = [
-            (rows_by_pid[p]["block_path"],
-             *dl.encode_positions(diff[p], int(rows_by_pid[p]["n_rows"])),
-             int(rows_by_pid[p]["n_rows"]))
-            for p in sorted(diff)
-        ]
-        spec_pdf = pd.DataFrame(
-            {
-                "block_path": [s[0] for s in enc_specs],
-                "enc": [s[1] for s in enc_specs],
-                "data": [s[2] for s in enc_specs],
-                "n_rows": [s[3] for s in enc_specs],
-            }
-        )
-        src = spark.createDataFrame(spec_pdf).repartition(
-            min(len(spec_pdf), spark.sparkContext.defaultParallelism * 4)
+        encs = [dl.encode_positions(diff[p], int(r["n_rows"])) for p, r in zip(pids, rows)]
+        src = _spec_src_df(
+            spark,
+            block_path=[r["block_path"] for r in rows],
+            enc=[e[0] for e in encs],
+            data=[e[1] for e in encs],
+            n_rows=[int(r["n_rows"]) for r in rows],
         )
 
         def deleted_rows(batches):

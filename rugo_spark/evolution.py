@@ -154,8 +154,7 @@ def rename_column(out_dir: str, old: str, new: str) -> dict:
     rewrite).  Returns the updated view."""
     if old == new:
         raise ValueError("rename: old and new name are identical")
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         _guard_no_inflight_append(out_dir)
         payload = mf.read_schema_payload(out_dir)
         if payload is None:
@@ -187,13 +186,6 @@ def rename_column(out_dir: str, old: str, new: str) -> dict:
         payload[VIEW_KEY] = view
         mf.write_schema_payload(out_dir, payload)
         return view
-    finally:
-        import os
-
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def drop_column(out_dir: str, name: str) -> dict:
@@ -202,8 +194,7 @@ def drop_column(out_dir: str, name: str) -> dict:
     appends write an all-null placeholder there.  Refuses to drop the last
     column, the dataset's size column, or anything a constraint/z-order
     spec references."""
-    lock = mf._acquire_consolidate_lock(out_dir)
-    try:
+    with mf.writer_lock(out_dir):
         _guard_no_inflight_append(out_dir)
         payload = mf.read_schema_payload(out_dir)
         if payload is None:
@@ -250,10 +241,3 @@ def drop_column(out_dir: str, name: str) -> dict:
         payload[VIEW_KEY] = view
         mf.write_schema_payload(out_dir, payload)
         return view
-    finally:
-        import os
-
-        try:
-            os.remove(lock)
-        except OSError:
-            pass

@@ -12,6 +12,7 @@ rugo-``read_metadata``-shaped nested dict for functional parity.
 from __future__ import annotations
 
 import base64
+import contextlib
 import json
 import os
 
@@ -333,9 +334,19 @@ def consolidate_manifest(out_dir: str, min_sidecars: int = 1) -> dict:
             "it before consolidating — folding condemned sidecars would "
             "resurrect partitions the rollback is deleting"
         )
+    with writer_lock(out_dir):
+        return _consolidate_locked(out_dir, min_sidecars)
+
+
+@contextlib.contextmanager
+def writer_lock(out_dir: str):
+    """Hold the dataset's single-writer lock for the ``with`` body: every
+    commit that rewrites shared metadata (manifest fold, snapshot expiry and
+    rollback, DML, schema evolution) runs under it.  Released when the body
+    raises too."""
     lock = _acquire_consolidate_lock(out_dir)
     try:
-        return _consolidate_locked(out_dir, min_sidecars)
+        yield
     finally:
         try:
             os.remove(lock)
@@ -1210,8 +1221,7 @@ def expire_snapshots(
             f"{out_dir} has an in-progress rollback; resume it before "
             "expiring snapshots (the log is being rewritten)"
         )
-    lock = _acquire_consolidate_lock(out_dir)
-    try:
+    with writer_lock(out_dir):
         log = snapshot_log(out_dir, strict=True)
         tagged = set(tags(out_dir).values())  # tagged snapshots never expire
         if older_than_s is None:
@@ -1237,11 +1247,6 @@ def expire_snapshots(
             "kept": [int(e["id"]) for e in kept],
             "delete_files_removed": dl.gc_orphans(out_dir),
         }
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
@@ -1278,8 +1283,7 @@ def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
             f"({mask}); resume THAT rollback (call rollback_to_snapshot with "
             "its snapshot id) before starting another"
         )
-    lock = _acquire_consolidate_lock(out_dir)
-    try:
+    with writer_lock(out_dir):
         keep_set = RangeSet(keep)
         if mask is None:
             # anything to drop?  (read the pre-mask state directly)
@@ -1404,8 +1408,3 @@ def rollback_to_snapshot(out_dir: str, snapshot_id: int) -> dict:
         result["delete_files_removed"] = dl.gc_orphans(out_dir)
         os.remove(marker_path)  # LAST: crash above stays masked + resumable
         return result
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass

@@ -55,7 +55,6 @@ def recluster_dataset(
     Returns ``{"copied", "rewritten", "tail_blocks", "rewritten_rows",
     "n_blocks"}``."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
 
     from rugo_spark import deletes as dl
@@ -164,12 +163,10 @@ def recluster_dataset(
     rewritten_rows = 0
     gids_with_rows: set[int] = set()
     if band_meta:
-        src_pdf = pd.DataFrame({
-            "pid": [int(r["partition_id"]) for r in band_meta],
-            "path": [r["block_path"] for r in band_meta],
-        })
-        bands_src = spark.createDataFrame(src_pdf).repartition(
-            min(len(src_pdf), sc.defaultParallelism * 4)
+        bands_src = eng._spec_src_df(
+            spark,
+            pid=[int(r["partition_id"]) for r in band_meta],
+            path=[r["block_path"] for r in band_meta],
         )
 
         def scan_bands(batches):
@@ -297,9 +294,7 @@ def recluster_dataset(
         })
     n_copied = n_purged = 0
     if copy_specs:
-        cp_src = spark.createDataFrame(
-            pd.DataFrame({"spec": [json.dumps(s) for s in copy_specs]})
-        ).repartition(min(len(copy_specs), sc.defaultParallelism * 4))
+        cp_src = eng._spec_src_df(spark, spec=[json.dumps(s) for s in copy_specs])
 
         def copier(batches):
             import shutil as _sh

@@ -212,6 +212,61 @@ def test_delete_keys_takedown(spark, token_df, encoded):
     assert decode_table(spark, encoded).count() == 0
 
 
+def test_delete_where_and_delete_keys_write_equal_entries(spark, token_df, tmp_path):
+    """The predicate and key DMLs share one mask scan: a doc_id range, and
+    the same ids as a key list, each on a fresh copy of one dataset, write
+    equal per-pid entries — positions, encodings and size_col tokens."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    from rugo_spark.engine import delete_keys
+
+    base = str(tmp_path / "base")
+    encode_table(token_df, base, key_col="doc_id", size_col="n_tok",
+                 num_partitions=6)
+    ids = sorted(r["doc_id"] for r in token_df.select("doc_id").collect())
+    lo, hi = ids[N_DOCS // 5], ids[N_DOCS * 3 // 4]
+    in_range = token_df.filter((F.col("doc_id") >= lo) & (F.col("doc_id") <= hi))
+    by_pred, by_keys = str(tmp_path / "pred"), str(tmp_path / "keys")
+    shutil.copytree(base, by_pred)
+    shutil.copytree(base, by_keys)
+    r_pred = delete_where(spark, by_pred, [("doc_id", ">=", lo), ("doc_id", "<=", hi)])
+    r_keys = delete_keys(spark, by_keys, "doc_id", in_range.select("doc_id"))
+
+    def entries(out, res):
+        return sorted(dl.read_delete_file(out, res["delete_file"])["entries"],
+                      key=lambda e: e["pid"])
+
+    got_pred, got_keys = entries(by_pred, r_pred), entries(by_keys, r_keys)
+    assert got_pred == got_keys and len(got_pred) > 1
+    assert r_pred["n_deleted"] == r_keys["n_deleted"] == in_range.count()
+    assert sum(e["deleted_tokens"] for e in got_pred) == \
+        in_range.agg(F.sum("n_tok")).first()[0] > 0
+
+
+@pytest.mark.parametrize("failing", ["update_unresolved_assignment",
+                                     "merge_check_violation"])
+def test_writer_lock_released_when_dml_raises(spark, token_df, encoded, failing):
+    import pyspark.sql.functions as F
+
+    from rugo_spark.engine import merge_table, set_constraint, update_where
+
+    if failing == "update_unresolved_assignment":
+        with pytest.raises(Exception, match="no_such_col"):
+            update_where(spark, encoded, [("n_tok", "<", 100)],
+                         {"n_tok": "no_such_col + 1"})
+    else:
+        set_constraint(encoded, "positive_tokens", "n_tok > 0")
+        bad = token_df.limit(5).withColumn("n_tok", F.lit(-1).cast("int"))
+        with pytest.raises(ValueError, match="positive_tokens"):
+            merge_table(bad, encoded, key_col="doc_id")
+    assert not os.path.exists(os.path.join(encoded, mf.CONSOLIDATE_LOCK))
+    assert decode_table(spark, encoded).count() == N_DOCS
+    res = delete_where(spark, encoded, [("n_tok", "<", 100)])
+    assert res["n_deleted"] == token_df.filter(F.col("n_tok") < 100).count() > 0
+
+
 def test_delete_validation(spark, encoded):
     with pytest.raises(ValueError, match="at least one"):
         delete_where(spark, encoded, [])
