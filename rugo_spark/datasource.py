@@ -167,38 +167,17 @@ class RugoReader(DataSourceReader):
         if not partition.block_path:
             return
         import pyarrow as pa
-        import zlib
 
-        from rugo_spark.engine import decode_block_payload, read_block_file
+        from rugo_spark.engine import read_live
 
         schema = pa.ipc.read_schema(pa.py_buffer(self._schema_bytes))
         order = self.columns if self.columns is not None else list(schema.names)
-        # a masked block decodes ALL stripes (delete positions are
-        # block-absolute; stripe skipping would shift offsets).  Safe:
-        # pushFilters returned every filter, so Spark re-applies them.
-        stripe_filters = None if partition.mask else (self.filters or None)
-        if self.verify:
-            # decode straight from the verified payload — no second file read
-            with open(partition.block_path, "rb") as f:
-                payload = f.read()
-            if zlib.crc32(payload) != partition.checksum:
-                raise IOError(f"checksum mismatch for {partition.block_path}")
-            batches = decode_block_payload(
-                memoryview(payload), schema, columns=self.columns,
-                filters=stripe_filters,
-            )
-        else:
-            batches = read_block_file(
-                partition.block_path, schema, columns=self.columns,
-                filters=stripe_filters,
-            )
-        if partition.mask:
-            from rugo_spark import deletes as dl
-
-            batches = dl.apply_mask(
-                batches, dl.union_positions(list(partition.mask))
-            )
-        for batch in batches:
+        # pushFilters returned every filter, so Spark re-applies them after
+        # read_live's stripe skipping (or its full decode of a masked block)
+        for batch in read_live(
+            partition.block_path, schema, self.columns, self.filters or None,
+            partition.mask, partition.checksum if self.verify else None,
+        ):
             batch = batch.select(order)
             if self._p2l:
                 batch = batch.rename_columns(
@@ -502,12 +481,14 @@ class RugoCDCStreamReader(DataSourceStreamReader):
 
     Offsets ARE snapshot ids — durable, monotone, and exactly the unit the
     commit protocol already makes atomic, so each micro-batch is the NET
-    row change between two committed snapshots (``engine.cdc_window``):
-    inserts decode only the pid ranges added in the window (under the end
-    state's masks), deletes decode only the touched pre-existing blocks
-    and take exactly the newly-masked positions.  A window crossing a
-    rollback fails the query loudly — CDC over a rewritten log is
-    undefined, and a silent skip would look like data loss downstream.
+    row change between two committed snapshots, planned and decoded by the
+    batch ``read_changes``' planner and kernel (``engine.cdc_plan``,
+    ``engine.read_cdc_block``): inserts decode only the pid ranges added in
+    the window (under the end state's masks), deletes decode only the
+    touched pre-existing blocks and take exactly the newly-masked
+    positions.  A window crossing a rollback fails the query loudly — CDC
+    over a rewritten log is undefined, and a silent skip would look like
+    data loss downstream.
 
     ``startingSnapshot`` option: ``latest`` (default — only NEW changes),
     ``earliest`` (everything after the first snapshot), an id, or a tag."""
@@ -566,9 +547,8 @@ class RugoCDCStreamReader(DataSourceStreamReader):
         return self._offset(max(tip, self._initial))
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        from rugo_spark import deletes as dl
         from rugo_spark import manifest as mf
-        from rugo_spark.engine import cdc_window
+        from rugo_spark.engine import cdc_plan
 
         a, b = int(start["snapshot"]), int(end["snapshot"])
         # Offset identity check FIRST: rollback reuses snapshot ids, so the
@@ -586,31 +566,7 @@ class RugoCDCStreamReader(DataSourceStreamReader):
                 )
         if a >= b:
             return []
-        win = cdc_window(self.root, a, b)
-        parts: list[InputPartition] = []
-        ins_pids = [
-            p for lo, hi in win["new_ranges"] for p in range(int(lo), int(hi))
-        ]
-        if ins_pids:
-            to_masks = dl.load_raw(
-                self.root,
-                sorted(win["to_entry"].get("delete_files") or []),
-            )
-            for pid, row in mf.load_rows(self.root, ins_pids).items():
-                parts.append(RugoCDCPartition(
-                    "insert", row["block_path"],
-                    tuple(to_masks.get(int(pid)) or ()),
-                ))
-        if win["delete_diffs"]:
-            rows = mf.load_rows(self.root, sorted(win["delete_diffs"]))
-            for pid, d in win["delete_diffs"].items():
-                n_rows = int(rows[pid]["n_rows"])
-                enc, data = dl.encode_positions(d, n_rows)
-                parts.append(RugoCDCPartition(
-                    "delete", rows[pid]["block_path"],
-                    ((enc, data, n_rows),),
-                ))
-        return parts
+        return [RugoCDCPartition(*row) for row in cdc_plan(self.root, a, b)]
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the checkpoint; the log itself is immutable
@@ -618,35 +574,13 @@ class RugoCDCStreamReader(DataSourceStreamReader):
     def read(self, partition: RugoCDCPartition) -> Iterator:
         import pyarrow as pa
 
-        from rugo_spark import deletes as dl
-        from rugo_spark.engine import read_block_file
+        from rugo_spark.engine import read_cdc_block
 
         schema = pa.ipc.read_schema(pa.py_buffer(self._schema_bytes))
-        # no stripe skipping: delete positions are block-absolute
-        batches = read_block_file(partition.block_path, schema, self._live, None)
-        if partition.kind == "insert":
-            if partition.mask:
-                batches = dl.apply_mask(
-                    batches, dl.union_positions(list(partition.mask))
-                )
-            label = "insert"
-        else:
-            enc, data, n_rows = partition.mask[0]
-            pos = dl.decode_positions(enc, data, int(n_rows))
-            tbl = pa.Table.from_batches(list(batches))
-            batches = tbl.take(pa.array(pos.astype("int64"))).to_batches()
-            label = "delete"
-        for batch in batches:
-            if self._p2l:
-                batch = batch.rename_columns(
-                    [self._p2l.get(c, c) for c in batch.schema.names]
-                )
-            if batch.num_rows:
-                yield pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array([label] * batch.num_rows, type=pa.string())],
-                    names=list(batch.schema.names) + ["_change_type"],
-                )
+        yield from read_cdc_block(
+            partition.kind, partition.block_path, partition.mask, schema,
+            self._live, self._p2l,
+        )
 
 
 class RugoCDCDataSource(DataSource):

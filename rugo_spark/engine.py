@@ -434,6 +434,50 @@ def decode_block_payload(
         yield _decode_flat_block(buf, schema, columns)
 
 
+class ChecksumMismatch(IOError):
+    """A block file's crc32 disagrees with the checksum its manifest row
+    recorded (bit rot, a torn copy, a foreign write)."""
+
+
+def read_live(
+    path: str,
+    schema: pa.Schema,
+    columns: list[str] | None = None,
+    filters: list[tuple] | None = None,
+    mask=(),
+    checksum: int | None = None,
+):
+    """The one block-read rule: a block as its reader sees it → RecordBatch
+    generator.  Every reader (decode, ``format("rugo")``, CDC, compaction,
+    recluster) reads through here.
+
+    ``mask``: the block's raw delete entries (``deletes.load_raw`` shape,
+    ``(enc, data_b64, n_rows)`` each).  Delete positions are block-absolute,
+    so a masked block decodes EVERY stripe (``filters`` are dropped — the
+    caller re-applies them exactly) and only then loses its masked rows.
+    ``checksum``: verify the file's crc32 against it (``ChecksumMismatch``
+    otherwise) and decode from the same bytes — no second read."""
+    if mask:
+        filters = None
+    if checksum is None:
+        batches = read_block_file(path, schema, columns, filters)
+    else:
+        with open(path, "rb") as f:
+            payload = f.read()
+        got = zlib.crc32(payload)
+        if got != checksum:
+            raise ChecksumMismatch(
+                f"checksum mismatch for {path}: block corrupted "
+                f"(manifest {checksum}, file {got})"
+            )
+        batches = decode_block_payload(memoryview(payload), schema, columns, filters)
+    if mask:
+        from rugo_spark import deletes as dl
+
+        batches = dl.apply_mask(batches, dl.union_positions(list(mask)))
+    yield from batches
+
+
 # ------------------------------------------------------------- encode job
 
 def _conf_get(conf, key: str, default: str = "") -> str:
@@ -937,8 +981,10 @@ def append_table(
     # CHECK constraints: one early-exit pass over the incoming rows,
     # BEFORE any band is reserved (a violation leaves nothing to reclaim).
     # SQL CHECK semantics: only rows where a constraint is FALSE violate
-    # (NULL passes).  Merge and update route through here too.
-    _enforce_constraints(df, out_dir)
+    # (NULL passes).  Merge and update check their source themselves,
+    # before their mask scan writes a delete file.
+    if _snapshot_op == "append":
+        _enforce_constraints(df, out_dir)
     appends_dir = os.path.join(out_dir, mf.APPENDS_DIR)
     os.makedirs(appends_dir, exist_ok=True)
     marker = os.path.join(appends_dir, f"append-{fp[:16]}.json")
@@ -1739,6 +1785,7 @@ def update_where(
         for c, expr in assignments.items():
             src = src.withColumn(c, F.expr(expr).cast(dict(src.dtypes)[c]))
         src = src.select(*logical_order)  # dataset order, logical names
+        _enforce_constraints(src, out_dir)
         # the source derives FROM the dataset, so the resume fingerprint
         # must pin the lifecycle state it was decoded from: if another
         # commit (a delete, another update) lands between a crash and the
@@ -1838,6 +1885,7 @@ def merge_table(
         # account n_tokens the same way the deleted rows are subtracted,
         # or metadata_agg drifts from a scan after every merge
         size_col = (mf.read_schema_payload(out_dir) or {}).get("size_col")
+    _enforce_constraints(df, out_dir)
     fp = _input_fingerprint(df)
     with mf.writer_lock(out_dir):
         entries = _key_mask_entries(
@@ -2826,17 +2874,12 @@ def compact_dataset(
                         row["bloom_col"] = bloom_col
                         row["bloom"] = _bloom.union(member_blooms)
                 else:
-                    from rugo_spark import deletes as _dl
-
-                    parts = []
-                    for m in members:
-                        mb = read_block_file(m["block_path"], schema)
-                        raw = masks.get(int(m["partition_id"]))
-                        if raw:  # block-absolute positions; no stripe skip
-                            mb = _dl.apply_mask(
-                                mb, _dl.union_positions(raw["entries"])
-                            )
-                        parts.extend(mb)
+                    parts = [
+                        b for m in members for b in read_live(
+                            m["block_path"], schema,
+                            mask=masks.get(int(m["partition_id"]), {}).get("entries", ()),
+                        )
+                    ]
                     tbl = pa.Table.from_batches(parts, schema=schema)
                     if sort_key is not None:
                         tbl = tbl.sort_by(sort_key)
@@ -3220,12 +3263,13 @@ def decode_table(
     verify_checksums: bool = False,
     on_corrupt: str = "error",
     snapshot_id: int | None = None,
-    _restrict_ranges: list | None = None,
 ) -> DataFrame:
-    """Reconstruct the original DataFrame from blocks. One task per block file,
-    no shuffle; column pruning skips undecoded columns entirely; ``filters``
-    (ANDed ``(col, op, value)`` triples) skip whole blocks via manifest
-    min/max stats *and* are re-applied exactly on the decoded rows.
+    """Reconstruct the original DataFrame from blocks, no shuffle.
+    ``_decode_plan`` packs the blocks into tasks (a driver plan: at most
+    ``max(4 × defaultParallelism, bytes / 32 MB)``), each reading its blocks
+    through ``read_live``; column pruning skips undecoded columns entirely;
+    ``filters`` (ANDed ``(col, op, value)`` triples) skip whole blocks via
+    manifest min/max stats *and* are re-applied exactly on the decoded rows.
 
     Planning reads only the manifest: small manifests in a driver loop
     (lowest latency), large ones in a Spark stage (scales to 10⁶ blocks);
@@ -3233,28 +3277,22 @@ def decode_table(
 
     ``on_corrupt`` (with ``verify_checksums``): 'error' fails the job on a
     checksum mismatch; 'skip' quarantines the block (logs to stderr, decodes
-    the rest) — the at-scale triage mode: one rotted block of 10⁶ shouldn't
-    kill a day-long read, and the manifest pins exactly which partition to
-    re-encode.
+    the rest; any other read error still fails the job) — the at-scale
+    triage mode: one rotted block of 10⁶ shouldn't kill a day-long read,
+    and the manifest pins exactly which partition to re-encode.
 
     ``snapshot_id``: time travel — decode the dataset exactly as it was at
     that snapshot (``manifest.snapshot_log``; the Iceberg as-of-snapshot
     analog).  Within a dataset dir partitions are append-only, so a
     snapshot is a pid-range set and planning simply restricts to it,
     including whole-segment pruning of disjoint segments."""
+    if on_corrupt not in ("error", "skip"):
+        raise ValueError(f"on_corrupt must be 'error' or 'skip', got {on_corrupt!r}")
     if snapshot_id is not None:
         snapshot_id = mf.resolve_snapshot(out_dir, snapshot_id)  # tags ok
     keep_ranges = (
         mf.snapshot_ranges(out_dir, snapshot_id) if snapshot_id is not None else None
     )
-    if _restrict_ranges is not None:
-        # internal (read_changes): intersect an extra pid-range restriction
-        # into the plan — e.g. "only the pids added between two snapshots"
-        keep_ranges = (
-            _restrict_ranges
-            if keep_ranges is None
-            else mf.intersect_ranges(keep_ranges, _restrict_ranges)
-        )
     from rugo_spark import deletes as dl
 
     arrow_schema, spark_schema_json = mf.read_schema(out_dir)
@@ -3307,46 +3345,22 @@ def decode_table(
     )
 
     def decoder(batches):
-        from rugo_spark import deletes as _dl
-
         masks = masks_bc.value if masks_bc is not None else {}
         for batch in batches:
-            crcs = batch.column(1).to_pylist()
-            for i, path in enumerate(batch.column(0).to_pylist()):  # per-partition only
-                raw_mask = masks.get(_pid_of_block_path(path)) if masks else None
-                # a masked block decodes ALL stripes (positions are
-                # block-absolute; stripe skipping would shift offsets) —
-                # the driver-side exact filter still applies afterwards
-                stripe_filters = None if raw_mask is not None else filters
-                if verify_checksums:
-                    # decode straight from the verified bytes — no 2nd read
-                    with open(path, "rb") as f:
-                        payload = f.read()
-                    got = zlib.crc32(payload)
-                    want = crcs[i]
-                    if want is not None and got != want:
-                        msg = (
-                            f"checksum mismatch for {path}: block corrupted "
-                            f"(manifest {want}, file {got})"
-                        )
-                        if on_corrupt == "skip":
-                            import sys as _sys
+            for path, crc in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+                live = read_live(
+                    path, arrow_schema, decode_cols, filters,
+                    masks.get(_pid_of_block_path(path), ()) if masks else (),
+                    crc if verify_checksums else None,
+                )
+                try:
+                    yield from live
+                except ChecksumMismatch as e:
+                    if on_corrupt != "skip":
+                        raise
+                    import sys as _sys
 
-                            print(f"rugo_spark: QUARANTINED {msg}", file=_sys.stderr)
-                            continue
-                        raise IOError(msg)
-                    out_batches = decode_block_payload(
-                        memoryview(payload), arrow_schema, decode_cols, stripe_filters
-                    )
-                else:
-                    out_batches = read_block_file(
-                        path, arrow_schema, decode_cols, stripe_filters
-                    )
-                if raw_mask is not None:
-                    out_batches = _dl.apply_mask(
-                        out_batches, _dl.union_positions(raw_mask)
-                    )
-                yield from out_batches
+                    print(f"rugo_spark: QUARANTINED {e}", file=_sys.stderr)
 
     out = man.mapInArrow(decoder, out_schema)
     if filters:
@@ -3391,9 +3405,8 @@ def _subtract_ranges(a: list, b: list) -> list[list[int]]:
 def cdc_window(
     out_dir: str, from_snapshot: int, to_snapshot: int
 ) -> dict:
-    """Validated CDC window between two snapshot ids — the shared planner
-    behind :func:`read_changes` (batch) and the ``rugo_cdc`` streaming
-    source.  Returns ``{"from_entry", "to_entry", "from_ranges",
+    """Validated CDC window between two snapshot ids — the first step of
+    :func:`cdc_plan`.  Returns ``{"from_entry", "to_entry", "from_ranges",
     "to_ranges", "new_ranges", "delete_diffs"}`` where ``delete_diffs``
     maps pre-existing pids to the np.uint32 positions newly masked inside
     the window.  Raises when the window crosses a rollback (pid ranges or
@@ -3458,6 +3471,65 @@ def cdc_window(
     }
 
 
+def cdc_plan(out_dir: str, from_snapshot: int, to_snapshot: int) -> list[tuple]:
+    """The CDC planner behind :func:`read_changes` and the ``rugo_cdc``
+    stream: the window's ``(kind, block_path, mask)`` rows, pid-sorted.
+
+    - ``insert``: each block added inside the window, with the END state's
+      raw mask entries (a row appended then deleted inside the window was
+      never visible at either endpoint — not a change);
+    - ``delete``: each pre-existing block with newly-masked rows, with ONE
+      entry holding exactly those positions.
+
+    Raises when the window crosses a rollback (``cdc_window``) or a pid
+    resolves to no manifest row (``manifest.load_rows``)."""
+    from rugo_spark import deletes as dl
+
+    win = cdc_window(out_dir, from_snapshot, to_snapshot)
+    parts: list[tuple] = []
+    ins_pids = [p for lo, hi in win["new_ranges"] for p in range(int(lo), int(hi))]
+    if ins_pids:
+        to_masks = dl.load_raw(out_dir, sorted(win["to_entry"].get("delete_files") or []))
+        rows = mf.load_rows(out_dir, ins_pids)
+        for pid in ins_pids:
+            parts.append(("insert", rows[pid]["block_path"], tuple(to_masks.get(pid) or ())))
+    diffs = win["delete_diffs"]
+    if diffs:
+        rows = mf.load_rows(out_dir, sorted(diffs))
+        for pid in sorted(diffs):
+            # positions ride COMPRESSED (pos32/bitmap/all, zstd'd) — a mass
+            # retention delete of 1M-row blocks would otherwise put ~4 MB of
+            # raw uint32 per block on the driver and in every task payload
+            n_rows = int(rows[pid]["n_rows"])
+            enc, data = dl.encode_positions(diffs[pid], n_rows)
+            parts.append(("delete", rows[pid]["block_path"], ((enc, data, n_rows),)))
+    return parts
+
+
+def read_cdc_block(kind: str, path: str, mask, schema: pa.Schema,
+                   columns: list[str] | None = None, p2l: dict | None = None):
+    """The CDC kernel: one :func:`cdc_plan` row → RecordBatches of the
+    ``columns`` (physical; ``p2l`` renames them to logical) plus
+    ``_change_type``.  An insert is the block read live under its mask; a
+    delete decodes the whole block and takes exactly the masked positions."""
+    if kind == "insert":
+        batches = read_live(path, schema, columns, mask=mask)
+    else:
+        from rugo_spark import deletes as dl
+
+        tbl = pa.Table.from_batches(list(read_live(path, schema, columns)))
+        pos = dl.union_positions(list(mask)).astype("int64")
+        batches = tbl.take(pa.array(pos)).to_batches()
+    for batch in batches:
+        if p2l:
+            batch = batch.rename_columns([p2l.get(c, c) for c in batch.schema.names])
+        if batch.num_rows:
+            yield pa.RecordBatch.from_arrays(
+                list(batch.columns) + [pa.array([kind] * batch.num_rows, type=pa.string())],
+                names=list(batch.schema.names) + ["_change_type"],
+            )
+
+
 def read_changes(
     spark: SparkSession,
     out_dir: str,
@@ -3471,21 +3543,14 @@ def read_changes(
     Everything derives from two snapshot entries — each carries its
     cumulative pid ranges and delete-file list — so the diff costs two log
     reads plus decodes proportional to the CHANGE, not the table:
-
-    - inserts: blocks in pid ranges added between the snapshots, decoded
-      under the TO state's masks (a row appended then deleted inside the
-      window was never visible at either endpoint — not a change);
-    - deletes: per-pid mask-position diffs on pre-existing blocks,
-      materialized by decoding ONLY the touched blocks and taking exactly
-      the newly-masked positions.
+    :func:`cdc_plan` lists the added blocks (inserts, under the TO state's
+    masks) and the pre-existing blocks with newly-masked positions
+    (deletes), and one ``mapInArrow`` of :func:`read_cdc_block` decodes
+    them — the same planner and kernel as the ``rugo_cdc`` stream.
 
     Raises if the window crosses a rollback (pid ranges or mask positions
     shrank — the log was rewritten, the diff is undefined)."""
-    import base64 as _b64
-
     from pyspark.sql.types import StringType, StructField, StructType
-
-    from rugo_spark import deletes as dl
 
     log = mf.snapshot_log(out_dir, strict=True)
     if not log:
@@ -3495,14 +3560,12 @@ def read_changes(
         to_snapshot = mf.resolve_snapshot(out_dir, to_snapshot)
     if to_snapshot is None:
         to_snapshot = int(log[-1]["id"])
-    win = cdc_window(out_dir, int(from_snapshot), int(to_snapshot))
+    parts = cdc_plan(out_dir, int(from_snapshot), int(to_snapshot))
     arrow_schema, spark_schema_json = mf.read_schema(out_dir)
-    from pyspark.sql.types import StructType as _ST
-
-    full = _ST.fromJson(spark_schema_json)
+    full = StructType.fromJson(spark_schema_json)
     # rename/drop evolution: CDC rows surface under the CURRENT logical
-    # view (Delta CDF reads under the latest schema too); the delete-side
-    # kernel decodes physically and renames per batch
+    # view (Delta CDF reads under the latest schema too); the kernel
+    # decodes physically and renames per batch
     from rugo_spark import evolution as evo
 
     _view = evo.column_view(mf.read_schema_payload(out_dir))
@@ -3512,76 +3575,27 @@ def read_changes(
         _, _p2l = evo.maps(_view)
         _live_phys = evo.live_physical(_view)
         by_name = {f.name: f for f in full.fields}
-        full = _ST([
+        full = StructType([
             StructField(_p2l[p], by_name[p].dataType, by_name[p].nullable)
             for p in _live_phys
         ])
     out_schema = StructType(
         list(full.fields) + [StructField("_change_type", StringType(), False)]
     )
-    import pyspark.sql.functions as F
-
-    parts: list[DataFrame] = []
-    if int(from_snapshot) == int(to_snapshot):
-        return spark.createDataFrame([], out_schema)
-
-    new_ranges = win["new_ranges"]
-    if new_ranges:
-        parts.append(
-            decode_table(
-                spark, out_dir, snapshot_id=int(to_snapshot),
-                _restrict_ranges=new_ranges,
-            ).withColumn("_change_type", F.lit("insert"))
-        )
-
-    # newly-masked positions on PRE-EXISTING blocks
-    diff = win["delete_diffs"]
-    if diff:
-        rows_by_pid = mf.load_rows(out_dir, sorted(diff))
-        schema_bytes = arrow_schema.serialize().to_pybytes()
-        pids = sorted(diff)
-        rows = [rows_by_pid[p] for p in pids]
-        # positions ride COMPRESSED (pos32/bitmap/all, zstd'd) — a mass
-        # retention delete of 1M-row blocks would otherwise put ~4 MB of
-        # raw uint32 per block on the driver and in every task payload
-        encs = [dl.encode_positions(diff[p], int(r["n_rows"])) for p, r in zip(pids, rows)]
-        src = _spec_src_df(
-            spark,
-            block_path=[r["block_path"] for r in rows],
-            enc=[e[0] for e in encs],
-            data=[e[1] for e in encs],
-            n_rows=[int(r["n_rows"]) for r in rows],
-        )
-
-        def deleted_rows(batches):
-            from rugo_spark import deletes as _dl
-
-            schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
-            for batch in batches:
-                for path, enc, data, n_rows in zip(
-                    batch.column(0).to_pylist(), batch.column(1).to_pylist(),
-                    batch.column(2).to_pylist(), batch.column(3).to_pylist(),
-                ):
-                    pos = _dl.decode_positions(enc, data, int(n_rows))
-                    tbl = pa.Table.from_batches(
-                        list(read_block_file(path, schema, _live_phys, None))
-                    )
-                    taken = tbl.take(pa.array(pos.astype("int64")))
-                    if _p2l:
-                        taken = taken.rename_columns(
-                            [_p2l.get(c, c) for c in taken.schema.names]
-                        )
-                    taken = taken.append_column(
-                        "_change_type",
-                        pa.array(["delete"] * taken.num_rows, type=pa.string()),
-                    )
-                    yield from taken.to_batches()
-
-        parts.append(src.mapInArrow(deleted_rows, out_schema))
-
     if not parts:
         return spark.createDataFrame([], out_schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    src = _spec_src_df(
+        spark,
+        kind=[k for k, _, _ in parts],
+        block_path=[p for _, p, _ in parts],
+        mask=[json.dumps(m) for _, _, m in parts],
+    )
+
+    def changes(batches):
+        for batch in batches:
+            for kind, path, mask in zip(*(c.to_pylist() for c in batch.columns)):
+                yield from read_cdc_block(
+                    kind, path, json.loads(mask), arrow_schema, _live_phys, _p2l
+                )
+
+    return src.mapInArrow(changes, out_schema)

@@ -133,12 +133,7 @@ def recluster_dataset(
         for _, hi in [_minmax(r)] if hi is not None and _coerce(hi) > maxes[-1]
     })
     # visible masks (consistent view: single read under no writer)
-    masks_by_pid: dict[int, list] = {}
-    for name in dl.visible_delete_files(src_dir):
-        for e in dl.read_delete_file(src_dir, name).get("entries", []):
-            masks_by_pid.setdefault(int(e["pid"]), []).append(
-                (e["enc"], e.get("data", ""), int(e["n_rows"]))
-            )
+    masks_by_pid = dl.load_raw(src_dir, dl.visible_delete_files(src_dir))
 
     mf.clear_manifest(dst_dir)
     extras = {
@@ -153,7 +148,11 @@ def recluster_dataset(
                             "num_partitions": n_base + len(tail_bounds)})
     blocks_dir = os.path.join(dst_dir, mf.BLOCKS_DIR)
     os.makedirs(blocks_dir, exist_ok=True)
-    schema_bytes = arrow_schema.serialize().to_pybytes()
+    # the schema decoded blocks carry (every field nullable) — it types the
+    # table of a block whose rows are all masked
+    schema_bytes = pa.schema(
+        [(f.name, f.type) for f in arrow_schema]
+    ).serialize().to_pybytes()
     sc = spark.sparkContext
     maxes_bc = sc.broadcast(maxes)
     tail_bc = sc.broadcast(tail_bounds)
@@ -170,8 +169,7 @@ def recluster_dataset(
         )
 
         def scan_bands(batches):
-            from rugo_spark import deletes as _dl
-            from rugo_spark.engine import read_block_file
+            from rugo_spark.engine import read_live
 
             schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
             mx = np.array(maxes_bc.value)
@@ -179,14 +177,9 @@ def recluster_dataset(
             for b in batches:
                 for pid, path in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
                     tbl = pa.Table.from_batches(
-                        list(read_block_file(path, schema, None, None))
+                        list(read_live(path, schema, mask=masks_bc.value.get(int(pid), ()))),
+                        schema=schema,
                     )
-                    raw = masks_bc.value.get(int(pid))
-                    if raw:
-                        tbl = pa.Table.from_batches(
-                            list(_dl.apply_mask(tbl.to_batches(), _dl.union_positions(raw))),
-                            schema=tbl.schema,
-                        )
                     if tbl.num_rows == 0:
                         continue
                     keys = tbl.column(sort_key).to_numpy(zero_copy_only=False)
@@ -225,8 +218,7 @@ def recluster_dataset(
         base_bc = sc.broadcast(base_map)
 
         def fold(key: tuple, tbl: pa.Table) -> pa.Table:
-            from rugo_spark import deletes as _dl
-            from rugo_spark.engine import encode_block_row, read_block_file
+            from rugo_spark.engine import encode_block_row, read_live
 
             gid = int(key[0].as_py())
             if os.path.exists(mf.sidecar_path(dst_dir, gid)):
@@ -239,15 +231,8 @@ def recluster_dataset(
                 path, raw = entry
                 schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
                 base_tbl = pa.Table.from_batches(
-                    list(read_block_file(path, schema, None, None))
+                    list(read_live(path, schema, mask=raw)), schema=schema
                 )
-                if raw:
-                    base_tbl = pa.Table.from_batches(
-                        list(_dl.apply_mask(
-                            base_tbl.to_batches(), _dl.union_positions(list(raw))
-                        )),
-                        schema=base_tbl.schema,
-                    )
                 # pre-evolution base blocks may store fewer columns: decode
                 # null-fills the tail, so both sides share the full schema
                 tbl = pa.concat_tables([base_tbl, tbl], promote_options="default")
@@ -299,8 +284,7 @@ def recluster_dataset(
         def copier(batches):
             import shutil as _sh
 
-            from rugo_spark import deletes as _dl
-            from rugo_spark.engine import encode_block_row, read_block_file
+            from rugo_spark.engine import encode_block_row, read_live
 
             schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
             for b in batches:
@@ -312,14 +296,9 @@ def recluster_dataset(
                     dst = os.path.join(blocks_dir, f"part-{gid:06d}.rgb")
                     if spec["masked"]:
                         tbl = pa.Table.from_batches(
-                            list(read_block_file(spec["src"], schema, None, None))
-                        )
-                        raw = masks_bc.value.get(int(spec["pid"])) or []
-                        tbl = pa.Table.from_batches(
-                            list(_dl.apply_mask(
-                                tbl.to_batches(), _dl.union_positions(raw)
-                            )),
-                            schema=tbl.schema,
+                            list(read_live(spec["src"], schema,
+                                           mask=masks_bc.value[int(spec["pid"])])),
+                            schema=schema,
                         )
                         row = encode_block_row(
                             tbl, dst, gid, sort_key=sort_key,

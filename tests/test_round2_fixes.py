@@ -339,6 +339,8 @@ def test_decode_on_corrupt_skip_quarantines_block(spark, tmp_out):
     with pytest.raises(Exception):  # default: fail loudly
         decode_table(spark, tmp_out, verify_checksums=True).count()
 
+    with pytest.raises(ValueError, match="on_corrupt"):
+        decode_table(spark, tmp_out, verify_checksums=True, on_corrupt="skp")
     n = decode_table(spark, tmp_out, verify_checksums=True, on_corrupt="skip").count()
     assert 0 < n < 400  # rest of the dataset still decodes
 
