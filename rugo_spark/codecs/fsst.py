@@ -9,8 +9,9 @@ compression encoding slots DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY
 
 Differences from the published FSST algorithm (deliberate, from-scratch):
 the table is trained by bounded byte-pair-merge rounds (BPE-style) on a
-sample, and encoding applies the same merge sequence vectorized — every pass
-is whole-array numpy; there is no per-byte Python loop anywhere.
+sample, each round one whole-array numpy pass; encoding is FSST's greedy
+longest-match walk (a small C kernel, or a numpy walk vectorized across
+512-byte chunks when no compiler is available) — no per-byte Python loop.
 
 Payload layout (little-endian):
   u8 n_symbols | (u8 len | bytes)*n_symbols | u64 orig_len |
@@ -37,10 +38,8 @@ _K = np.uint32(_CODE_SPACE)
 
 @dataclass
 class Table:
-    rounds: list[np.ndarray] = field(default_factory=list)  # dense pair LUTs (int16)
     n_merges: int = 0
     expansions: list[bytes] = field(default_factory=list)  # per internal code ≥256
-    code_map: np.ndarray | None = None  # internal code → output code (or -1)
     out_expansions: list[bytes] = field(default_factory=list)  # per output code
 
 
@@ -49,7 +48,7 @@ def _apply_round(codes: np.ndarray, lut: np.ndarray) -> np.ndarray:
     vectorized pass.
 
     ``lut`` is a dense (CODE_SPACE²) int16 map pair-key → merged code (or
-    −1): a single gather, no searchsorted — this is the encode hot loop.
+    −1): a single gather, no searchsorted — the training hot loop.
     Greedy-left overlap resolution (within a run of k overlapping candidates
     merge every other one, ⌈k/2⌉ total) is computed with whole-array integer
     ops: run-relative position parity via cumsum + maximum.accumulate, no
@@ -122,27 +121,19 @@ def train(sample: bytes, max_merges: int = _MAX_MERGES, rounds: int = 4) -> Tabl
             n_sel += 1
         if n_sel == 0:
             break
-        t.rounds.append(lut)
         t.n_merges += n_sel
         codes = _apply_round(codes, lut)
     t.expansions = [expansions[c] for c in range(256, next_code)]
 
     # assign output codes: merged symbols first, then most frequent literals
-    n_codes = next_code
-    code_map = np.full(n_codes, -1, dtype=np.int16)
-    out_expansions: list[bytes] = []
-    for c in range(256, next_code):
-        code_map[c] = len(out_expansions)
-        out_expansions.append(expansions[c])
+    out_expansions = list(t.expansions)
     lit_codes = codes[codes < 256]
     if len(lit_codes):
         lits, lit_counts = np.unique(lit_codes, return_counts=True)
         for lit in lits[np.argsort(lit_counts)[::-1]]:
             if len(out_expansions) >= MAX_SYMBOLS:
                 break
-            code_map[int(lit)] = len(out_expansions)
             out_expansions.append(bytes([int(lit)]))
-    t.code_map = code_map
     t.out_expansions = out_expansions
     return t
 
@@ -200,8 +191,7 @@ def compress(data: bytes, t: Table) -> bytes:
     if n == 0:
         return b""
     # longest-match only needs the output expansions (deserialized pinned
-    # tables carry nothing else); code_map is a _compress_rounds concern
-    assert t.out_expansions is not None
+    # tables carry nothing else)
     lut1, lut_a, lut_b, symkey, symlen = _match_tables(t)
 
     # native path: the same greedy walk as a tiny C loop (no chunk seams,
@@ -266,32 +256,6 @@ def compress(data: bytes, t: Table) -> bytes:
         eo = starts[esc]
         out[eo] = ESCAPE
         out[eo + 1] = flat[esc] - 256
-    return out.tobytes()
-
-
-def _compress_rounds(data: bytes, t: Table) -> bytes:
-    """Round-application encoder (the trainer's own transform) — kept as the
-    reference implementation for differential tests."""
-    codes = np.frombuffer(data, dtype=np.uint8).astype(np.uint32)
-    for lut in t.rounds:
-        codes = _apply_round(codes, lut)
-    assert t.code_map is not None
-    out_code = t.code_map[codes]
-    esc = out_code < 0
-    n = len(codes)
-    # starts[i] = i + (escapes before i): escapes emit 2 bytes, symbols 1
-    incl = np.cumsum(esc, dtype=np.int64)
-    starts = np.arange(n, dtype=np.int64)
-    starts += incl
-    starts -= esc
-    total = n + (int(incl[-1]) if n else 0)
-    out = np.empty(total, dtype=np.uint8)
-    has_code = ~esc
-    out[starts[has_code]] = out_code[has_code]
-    if incl[-1] if n else 0:
-        eo = starts[esc]
-        out[eo] = ESCAPE
-        out[eo + 1] = codes[esc]  # escaped codes are always literal bytes < 256
     return out.tobytes()
 
 
@@ -415,34 +379,7 @@ def encode(
         fresh = t is None
         if fresh:
             t = train(data)
-    # Two encoders produce the same payload format with different stream
-    # regularity: chunked longest-match (`compress`) is faster and smaller
-    # post-zstd on ordinary text; round-application (`_compress_rounds`)
-    # tokenizes content-deterministically, which preserves zstd's long-range
-    # matches on corpora with large repeated spans (chunk seams shift the
-    # greedy phase).  A two-window sampled post-zstd trial picks per block.
-    enc = compress
-    from rugo_spark.codecs.fsst_native import get_kernel
-
-    # pinned tables carry only out_expansions (no training-round LUTs), so
-    # the round-application trial can't run — longest-match always
-    if table is None and get_kernel() is None and len(data) >= (1 << 19):
-        # numpy-walk fallback only: its 512-byte chunk seams shift the greedy
-        # phase, which breaks zstd long-range matches on corpora with big
-        # repeated spans — trial the round-application encoder per block.
-        # The native walk has no seams, so the trial (and its ~35 ms) is
-        # unnecessary there.
-        from rugo_spark.codecs import general as _g
-
-        # contiguous 256 KiB so repeat periods up to that size are visible
-        # to the trial (a stitched two-window sample can be accidentally
-        # chunk-grid-aligned and hide the seam effect)
-        sample = data[: 1 << 18]
-        fz = len(_g.wrap(compress(sample, t), _g.ZSTD))
-        rz = len(_g.wrap(_compress_rounds(sample, t), _g.ZSTD))
-        if rz < fz * 0.97:
-            enc = _compress_rounds
-    stream = enc(data, t)
+    stream = compress(data, t)
     if not fresh:
         bound = reuse["ratio"] if table is None else (
             expected_ratio if expected_ratio is not None else 1.0

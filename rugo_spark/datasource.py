@@ -191,7 +191,44 @@ class RugoCommit(WriterCommitMessage):
     sidecar: str  # JSON sidecar row (None-rows partitions send "")
 
 
-class RugoWriter(DataSourceArrowWriter):
+class _StagedTaskWriter:
+    """The task side of the batch and stream ``format('rugo')`` writers:
+    each task encodes its rows to an attempt-unique staging block (concurrent
+    speculative attempts cannot collide on a temp name) and sends the
+    sidecar row to the driver's ``commit``; ``abort`` drops staged blocks."""
+
+    def write(self, iterator) -> RugoCommit:
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        from rugo_spark.engine import encode_block_row
+
+        ctx = TaskContext.get()
+        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
+        batch_list = list(iterator)
+        if not batch_list:
+            return RugoCommit("")
+        tbl = pa.Table.from_batches(batch_list)
+        if tbl.num_rows == 0:
+            return RugoCommit("")
+        path = os.path.join(self.staging, f"a{attempt}-p{pid}.rgb")
+        row = encode_block_row(
+            tbl, path, pid, sort_key=self.sort_key, size_col=self.size_col
+        )
+        return RugoCommit(json.dumps(row, default=str))
+
+    def abort(self, messages, batchId: int | None = None) -> None:  # noqa: N803 (API name)
+        # drop staged files; the previous dataset (manifest + blocks) is
+        # untouched because nothing is cleared or published before commit()
+        for m in messages:
+            if m is not None and m.sidecar:
+                try:
+                    os.remove(json.loads(m.sidecar)["block_path"])
+                except OSError:
+                    pass
+
+
+class RugoWriter(_StagedTaskWriter, DataSourceArrowWriter):
     """Map-only encode under the V2 commit protocol.  Tasks encode to
     attempt-unique STAGING files (concurrent speculative attempts cannot
     collide on a temp name); ``commit()`` publishes blocks + sidecars +
@@ -239,26 +276,6 @@ class RugoWriter(DataSourceArrowWriter):
                         f"{have}, write has {want} (block decode is positional — "
                         "use mode('overwrite') to replace the dataset)"
                     )
-
-    def write(self, iterator) -> RugoCommit:
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        from rugo_spark.engine import encode_block_row
-
-        ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        batch_list = list(iterator)
-        if not batch_list:
-            return RugoCommit("")
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return RugoCommit("")
-        path = os.path.join(self.staging, f"a{attempt}-p{pid}.rgb")
-        row = encode_block_row(
-            tbl, path, pid, sort_key=self.sort_key, size_col=self.size_col
-        )
-        return RugoCommit(json.dumps(row, default=str))
 
     def commit(self, messages) -> None:
         import shutil
@@ -312,18 +329,8 @@ class RugoWriter(DataSourceArrowWriter):
         mf.commit_snapshot(self.out_dir, "overwrite" if self.overwrite else "append")
         shutil.rmtree(self.staging, ignore_errors=True)
 
-    def abort(self, messages) -> None:
-        # drop staged files; the previous dataset (manifest + blocks) is
-        # untouched because nothing is cleared or published before commit()
-        for m in messages:
-            if m is not None and m.sidecar:
-                try:
-                    os.remove(json.loads(m.sidecar)["block_path"])
-                except OSError:
-                    pass
 
-
-class RugoStreamWriter(DataSourceStreamArrowWriter):
+class RugoStreamWriter(_StagedTaskWriter, DataSourceStreamArrowWriter):
     """``writeStream.format('rugo')``: micro-batch ``n`` lands in
     ``<path>/batch=<n>/`` — the exact layout ``encode_stream``'s foreachBatch
     sink produces, so ``decode_batches`` reads either.  Tasks encode to a
@@ -341,26 +348,6 @@ class RugoStreamWriter(DataSourceStreamArrowWriter):
 
         self._arrow_schema_bytes = to_arrow_schema(schema).serialize().to_pybytes()
         self.staging = os.path.join(self.out_dir, ".staging")
-
-    def write(self, iterator) -> RugoCommit:
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        from rugo_spark.engine import encode_block_row
-
-        ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        batch_list = list(iterator)
-        if not batch_list:
-            return RugoCommit("")
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return RugoCommit("")
-        path = os.path.join(self.staging, f"a{attempt}-p{pid}.rgb")
-        row = encode_block_row(
-            tbl, path, pid, sort_key=self.sort_key, size_col=self.size_col
-        )
-        return RugoCommit(json.dumps(row, default=str))
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
         import shutil
@@ -408,14 +395,6 @@ class RugoStreamWriter(DataSourceStreamArrowWriter):
         # publish with one rename
         shutil.rmtree(epoch_dir, ignore_errors=True)
         os.rename(tmp_dir, epoch_dir)
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
-        for m in messages:
-            if m is not None and m.sidecar:
-                try:
-                    os.remove(json.loads(m.sidecar)["block_path"])
-                except OSError:
-                    pass
 
 
 class RugoDataSource(DataSource):

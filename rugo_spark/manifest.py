@@ -58,6 +58,18 @@ def write_schema(
     os.replace(tmp, os.path.join(out_dir, SCHEMA_FILE))
 
 
+# _schema.json keys every schema rewrite carries forward: state added after
+# a dataset's first write (CHECK constraints, the rename/drop column view,
+# a z-order spec) that a resume, compaction or recluster must not drop
+DURABLE_PAYLOAD_KEYS = ("constraints", "column_view", "zorder")
+
+
+def durable_payload(payload: dict | None, also: tuple = ()) -> dict:
+    """The ``DURABLE_PAYLOAD_KEYS`` (plus ``also``) entries of a raw
+    ``_schema.json`` payload, ready for ``write_schema(extra=...)``."""
+    return {k: v for k, v in (payload or {}).items() if k in DURABLE_PAYLOAD_KEYS + also}
+
+
 def write_schema_payload(out_dir: str, payload: dict) -> None:
     """Atomic raw replace of ``_schema.json`` — used by reclaim_append to
     restore the stashed pre-append schema after a crashed evolving append."""

@@ -136,10 +136,7 @@ def recluster_dataset(
     masks_by_pid = dl.load_raw(src_dir, dl.visible_delete_files(src_dir))
 
     mf.clear_manifest(dst_dir)
-    extras = {
-        k: v for k, v in payload.items()
-        if k in ("size_col", "constraints", "column_view", "zorder")
-    }
+    extras = mf.durable_payload(payload, also=("size_col",))
     mf.write_schema(dst_dir, arrow_schema, json.dumps(spark_schema),
                     extra=extras or None)
     # a future recluster/sorted-resume must see this is NOT a resumable
@@ -218,13 +215,11 @@ def recluster_dataset(
         base_bc = sc.broadcast(base_map)
 
         def fold(key: tuple, tbl: pa.Table) -> pa.Table:
-            from rugo_spark.engine import encode_block_row, read_live
+            from rugo_spark.engine import emit_sidecar, encode_block_row, read_live
 
             gid = int(key[0].as_py())
             if os.path.exists(mf.sidecar_path(dst_dir, gid)):
-                return pa.Table.from_batches([], schema=pa.schema(
-                    [(n, mf.MANIFEST_ARROW.field(n).type) for n in mf.MANIFEST_ARROW.names]
-                ))
+                return pa.Table.from_batches([], schema=mf.MANIFEST_ARROW)
             tbl = tbl.drop_columns("__rugo_gid")
             entry = base_bc.value.get(gid)
             if entry is not None:
@@ -242,13 +237,7 @@ def recluster_dataset(
                 tbl, out_path, gid, sort_key=sort_key, size_col=size_col,
                 presorted=True,
             )
-            mf.write_sidecar(dst_dir, row)
-            return pa.Table.from_pylist(
-                [{k: row[k] for k in mf.MANIFEST_ARROW.names}],
-                schema=pa.schema(
-                    [(n, mf.MANIFEST_ARROW.field(n).type) for n in mf.MANIFEST_ARROW.names]
-                ),
-            )
+            return pa.Table.from_batches([emit_sidecar(dst_dir, row)])
 
         folded = (
             bands_df.groupBy("__rugo_gid")

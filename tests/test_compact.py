@@ -136,3 +136,23 @@ def test_compact_sort_key_orders_within_blocks(spark, tmp_path):
             list(read_block_file(r["block_path"], schema, columns=["doc_id"]))
         )["doc_id"].to_pylist()
         assert ids == sorted(ids)
+
+
+def test_compact_not_null_dataset_rewrite_and_masked_fallback(spark, tmp_path):
+    # spark.range's id is NOT NULL in the stored Arrow schema, while decoded
+    # batches are all-nullable: the rewrite kernel (and the masked groups a
+    # default concat compaction falls back to it for) must accept them
+    from rugo_spark.engine import delete_where
+
+    src = str(tmp_path / "src")
+    encode_table(spark.range(1000).withColumnRenamed("id", "k"), src,
+                 key_col="k", num_partitions=2)
+    rw = str(tmp_path / "rw")
+    compact_dataset(spark, src, rw, mode="rewrite")
+    assert sorted(r["k"] for r in decode_table(spark, rw).collect()) == list(range(1000))
+
+    delete_where(spark, src, [("k", "<", 100)])
+    fb = str(tmp_path / "fb")
+    compact_dataset(spark, src, fb)
+    assert not os.path.isdir(os.path.join(fb, "_deletes"))
+    assert sorted(r["k"] for r in decode_table(spark, fb).collect()) == list(range(100, 1000))

@@ -391,12 +391,12 @@ def test_hybrid_ann_recall_and_scan_budget(spark):
     assert got == set(mirror)
 
 
-def test_fsst_native_kernel_matches_numpy():
+def test_fsst_native_kernel_matches_numpy(monkeypatch):
     # the C kernel and the numpy fallback produce interchangeable streams:
     # both decode (by either decoder) to the original bytes
     import numpy as np
 
-    from rugo_spark.codecs import fsst
+    from rugo_spark.codecs import fsst, fsst_native
     from rugo_spark.codecs.fsst_native import compress_native, decompress_native, get_kernel
 
     if get_kernel() is None:
@@ -412,10 +412,16 @@ def test_fsst_native_kernel_matches_numpy():
     assert out_np == data
     # native decoder reads the native stream
     assert decompress_native(nat, len(data), t.out_expansions) == data
-    # native decoder reads the numpy encoder's stream too
-    chunked = fsst.compress.__wrapped__(data, t) if hasattr(fsst.compress, "__wrapped__") else None
-    full = fsst.encode(data)
-    assert fsst.decode(full) == data
+    # the numpy longest-match walk (the no-compiler encoder): both decoders
+    # read its stream too
+    monkeypatch.setattr(fsst_native, "compress_native", lambda *a: None)
+    walked = fsst.compress(data, t)
+    assert walked != nat  # chunk seams: the walk really ran, not the kernel
+    assert decompress_native(walked, len(data), t.out_expansions) == data
+    assert fsst._decompress_stream(
+        np.frombuffer(walked, dtype=np.uint8), t.out_expansions
+    ) == data
+    assert fsst.decode(fsst.encode(data)) == data
 
 
 def test_fsst_empty_and_tiny_through_native():
