@@ -500,8 +500,16 @@ def main() -> None:
 
     def _decode_plan_count(tag: str) -> None:
         # decode_table's own plan (it picks the driver or the executor
-        # planner by manifest size), forced by a count
-        n = _timed(tag, lambda: _decode_plan(spark, man_work)[0].count())
+        # planner by manifest size, then the venue), forced by a count
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(mf.read_schema(man_work)[1])
+
+        def count() -> int:
+            src = _decode_plan(spark, man_work, None, None, None, None, None, schema)[0]
+            return src.num_rows if hasattr(src, "num_rows") else src.count()
+
+        n = _timed(tag, count)
         assert n == n_man, (tag, n)
 
     for _ in range(2):

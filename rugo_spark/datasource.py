@@ -258,12 +258,20 @@ class RugoWriter(_StagedTaskWriter, DataSourceArrowWriter):
             if existing is not None:
                 from rugo_spark import evolution as evo
 
-                view = evo.column_view(mf.read_schema_payload(self.out_dir))
+                payload = mf.read_schema_payload(self.out_dir)
+                view = evo.column_view(payload)
                 if view and any(e.get("as") or e.get("dropped") for e in view):
                     raise ValueError(
                         f"{self.out_dir} has renamed/dropped columns; "
                         "format('rugo') append does not translate the "
                         "logical view — use engine.append_table, which does"
+                    )
+                if (payload or {}).get("constraints"):
+                    raise ValueError(
+                        f"{self.out_dir} has CHECK constraints "
+                        f"{sorted(payload['constraints'])}; format('rugo') "
+                        "append cannot evaluate them in its writer tasks — "
+                        "use engine.append_table, which does"
                     )
                 import pyarrow as pa
 
@@ -318,7 +326,13 @@ class RugoWriter(_StagedTaskWriter, DataSourceArrowWriter):
                     "clears append markers) to reclaim the id space"
                 )
         arrow_schema = pa.ipc.read_schema(pa.py_buffer(self._arrow_schema_bytes))
-        mf.write_schema(self.out_dir, arrow_schema, self._schema_json)
+        # an append keeps the dataset's durable keys (z-order spec, column
+        # view, size_col; constraints refuse the append in __init__)
+        kept = (
+            {} if self.overwrite
+            else mf.durable_payload(mf.read_schema_payload(self.out_dir), also=("size_col",))
+        )
+        mf.write_schema(self.out_dir, arrow_schema, self._schema_json, kept)
         for row in rows:
             pid = offset + int(row["partition_id"])
             dst = os.path.join(self.out_dir, mf.BLOCKS_DIR, f"part-{pid:06d}.rgb")

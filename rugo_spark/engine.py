@@ -23,6 +23,7 @@ import zlib
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from rugo_spark import manifest as mf
 from rugo_spark.block import KIND_DEC128, KIND_DEC256, decode_array, encode_array
@@ -652,7 +653,7 @@ def encode_table_maponly(
     extra.update(mf.durable_payload(prev))
     mf.write_schema(out_dir, _arrow_schema_of(df), df.schema.json(), extra=extra)
     encoder = _split_encoder(spark, out_dir, sort_key, size_col, plans)
-    df.mapInArrow(encoder, mf.MANIFEST_DDL).write.mode("overwrite").format("noop").save()
+    df.mapInArrow(encoder, mf.MANIFEST_SCHEMA).write.mode("overwrite").format("noop").save()
     mf.commit_snapshot(out_dir, "encode")
     return manifest_df(spark, out_dir)
 
@@ -1060,7 +1061,7 @@ def append_table(
             }
         _atomic_write(marker, json.dumps(reservation).encode())
     encoder = _split_encoder(spark, out_dir, sort_key, size_col, plans, pid_base=base)
-    df.mapInArrow(encoder, mf.MANIFEST_DDL).write.mode("append").format("noop").save()
+    df.mapInArrow(encoder, mf.MANIFEST_SCHEMA).write.mode("append").format("noop").save()
     if new_names:
         # widen the dataset schema to the union, atomically, BEFORE the
         # completion flip.  In the crash window between the two, readers see
@@ -1262,10 +1263,11 @@ def _predicate_positions(batches, filters, offset_base: int = 0):
     return np.empty(0, dtype=np.uint32), off - offset_base
 
 
-_DELETE_ENTRY_DDL = (
-    "pid long, n_rows long, n_deleted long, deleted_tokens long, "
-    "enc string, data string"
-)
+# one delete-file entry (``deletes.mask_entry``) as a DML scan row
+_DELETE_ENTRY_SCHEMA = from_arrow_schema(pa.schema(
+    [(c, pa.int64()) for c in ("pid", "n_rows", "n_deleted", "deleted_tokens")]
+    + [("enc", pa.string()), ("data", pa.string())]
+))
 
 
 # manifest fields a DML candidate scan needs: block-skip stats + bloom
@@ -1336,8 +1338,10 @@ def _candidate_scan(
     ``emit(pid, tbl, pos, n_rows, sz)`` turns one block's matches (sorted
     uint32 ``pos``; ``sz`` their ``size_col`` values as float64, 0 where
     null or without a size column) into RecordBatches of ``out_schema``
-    inside the same ``mapInArrow`` task, so only what the caller keeps
-    leaves it.
+    (a ``StructType``) inside the same scan, so only what the caller keeps
+    leaves it.  A small scan (``_in_driver`` over the scanned columns)
+    runs right here, with the prior masks passed in, and returns a
+    LocalRelation; a larger one is one ``mapInArrow`` pass on executors.
     ``exclude_base``: the caller's own append band (:func:`_own_band`).
     Returns ``(DataFrame or None when no block is a candidate, sorted
     candidate pids)``."""
@@ -1351,20 +1355,15 @@ def _candidate_scan(
     pids = sorted(int(r["partition_id"]) for r in cands)
     if not cands:
         return None, pids
-    prior_bc = spark.sparkContext.broadcast(
-        dl.load_raw(out_dir, dl.visible_delete_files(out_dir))
-    )
+    prior_all = dl.load_raw(out_dir, dl.visible_delete_files(out_dir))
     schema_bytes = arrow_schema.serialize().to_pybytes()
     size_col = (mf.read_schema_payload(out_dir) or {}).get("size_col")
     tok_col = size_col if size_col in arrow_schema.names else None
     decode_cols = sorted({c for c, _, _ in filters} | ({tok_col} if tok_col else set()))
-    src = _spec_src_df(
-        spark,
-        pid=[int(r["partition_id"]) for r in cands],
-        block_path=[r["block_path"] for r in cands],
-    )
+    cand_pids = [int(r["partition_id"]) for r in cands]
+    cand_paths = [r["block_path"] for r in cands]
 
-    def scan(batches):
+    def scan(batches, prior_masks):
         import numpy as np
         import pyarrow.compute as pc
 
@@ -1375,7 +1374,7 @@ def _candidate_scan(
                     list(read_block_file(path, schema, decode_cols, None))
                 )
                 pos, n_rows = _predicate_positions(tbl.to_batches(), filters)
-                prior = prior_bc.value.get(int(pid))
+                prior = prior_masks.get(int(pid))
                 if prior is not None and len(pos):
                     pos = np.setdiff1d(pos, dl.union_positions(prior)).astype(np.uint32)
                 if not len(pos):
@@ -1389,7 +1388,15 @@ def _candidate_scan(
                 )
                 yield from emit(int(pid), tbl, pos, n_rows, sz)
 
-    return src.mapInArrow(scan, out_schema), pids
+    if _in_driver(cands, decode_cols, out_schema):
+        src = pa.RecordBatch.from_arrays(
+            [pa.array(cand_pids, pa.int64()), pa.array(cand_paths, pa.string())],
+            names=["pid", "block_path"],
+        )
+        return _arrow_df(spark, scan([src], prior_all), out_schema), pids
+    prior_bc = spark.sparkContext.broadcast(prior_all)
+    src_df = _spec_src_df(spark, pid=cand_pids, block_path=cand_paths)
+    return src_df.mapInArrow(lambda it: scan(it, prior_bc.value), out_schema), pids
 
 
 def _entry_batch(pid, tbl, pos, n_rows, sz):
@@ -1435,10 +1442,12 @@ def delete_where(
     are never opened (a retention delete on a range-sorted key touches only
     the matching blocks; their rows fold to a kilobyte ``"all"`` entry).
     Surviving candidates decode ONLY the predicate columns (plus the
-    recorded ``size_col`` for exact token accounting) in one mapInArrow
-    pass, emit per-block position sets, and the driver commits ONE delete
-    file + snapshot entry.  Already-deleted positions are subtracted so
-    repeated deletes are no-ops and per-file counts stay exact.
+    recorded ``size_col`` for exact token accounting) — in this process
+    when those columns are at most one stripe of raw Arrow, else in one
+    mapInArrow pass (``_candidate_scan``) — emit per-block position sets,
+    and the driver commits ONE delete file + snapshot entry.
+    Already-deleted positions are subtracted so repeated deletes are no-ops
+    and per-file counts stay exact.
 
     Readers apply masks at decode; ``compact_dataset`` physically purges
     them; ``rollback_to_snapshot`` past the delete un-deletes.  Commit is
@@ -1461,7 +1470,7 @@ def delete_where(
     with mf.writer_lock(out_dir):
         prior_files = dl.visible_delete_files(out_dir)
         scan, pids = _candidate_scan(
-            spark, out_dir, filters, None, _entry_batch, _DELETE_ENTRY_DDL
+            spark, out_dir, filters, None, _entry_batch, _DELETE_ENTRY_SCHEMA
         )
         entries = [r.asDict() for r in scan.collect()] if scan is not None else []
         fp = hashlib.sha1(
@@ -1667,7 +1676,7 @@ def _key_mask_entries(
         r.asDict()
         for r in scan.join(keys, "k", "inner")
         .groupBy("pid")
-        .applyInArrow(fold, _DELETE_ENTRY_DDL)
+        .applyInArrow(fold, _DELETE_ENTRY_SCHEMA)
         .collect()
     ]
 
@@ -1792,7 +1801,7 @@ def update_where(
     with mf.writer_lock(out_dir):
         # matched rows, transformed — the append side.  Decoded under the
         # lock so the source snapshot matches the masks computed below.
-        src = decode_table(spark, out_dir, filters=filters)
+        src, small = _decode(spark, out_dir, filters=filters)
         for c, expr in assignments.items():
             src = src.withColumn(c, F.expr(expr).cast(dict(src.dtypes)[c]))
         src = src.select(*logical_order)  # dataset order, logical names
@@ -1828,15 +1837,17 @@ def update_where(
         ).hexdigest()
         scan, _ = _candidate_scan(
             spark, out_dir, filters_phys, _own_band(out_dir, fp), _entry_batch,
-            _DELETE_ENTRY_DDL,
+            _DELETE_ENTRY_SCHEMA,
         )
         entries = [r.asDict() for r in scan.collect()] if scan is not None else []
         if not entries:
             return {"n_updated": 0, "delete_file": None, "snapshot": None}
         name = f"delete-update-{fp[:16]}.json"
         dl.write_delete_file(out_dir, name, entries, ["update", _filters_json(filters)])
+        # a source decoded in the driver is at most one stripe: one
+        # replacement block, not one per core its local relation splits into
         append_table(
-            src, out_dir, size_col=size_col,
+            src.coalesce(1) if small else src, out_dir, size_col=size_col,
             _ride_delete_files=[name], _snapshot_op="update", _fingerprint=fp,
         )
         dl.gc_orphans(out_dir)
@@ -2070,7 +2081,7 @@ def encode_table(
     else:
         n_tasks = max(par * 8, int(num_partitions) // 8)
     shuffled = planned.repartition(n_tasks, "__rugo_pid")
-    result = shuffled.mapInArrow(encoder, mf.MANIFEST_DDL)
+    result = shuffled.mapInArrow(encoder, mf.MANIFEST_SCHEMA)
     try:
         result.write.mode("overwrite").format("noop").save()
     finally:
@@ -2340,7 +2351,7 @@ def _encode_precombine(
             row["bloom"] = _bloom.union(blooms)
         return pa.Table.from_batches([emit_sidecar(out_dir, row)])
 
-    result = stripes.groupBy("partition_id").applyInArrow(assemble, mf.MANIFEST_DDL)
+    result = stripes.groupBy("partition_id").applyInArrow(assemble, mf.MANIFEST_SCHEMA)
     conf = spark.conf
     prev = _conf_get(conf, "spark.sql.shuffle.partitions", "200")
     prev_coalesce = _conf_get(conf, "spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -2361,18 +2372,29 @@ def _arrow_schema_of(df: DataFrame) -> pa.Schema:
     return to_arrow_schema(df.schema)
 
 
+def _arrow_df(spark: SparkSession, batches, schema) -> DataFrame:
+    """A DataFrame over Arrow batches held in this process: a LocalRelation,
+    so Spark's filter, select and collect over it start no job.  The one
+    Arrow → DataFrame call of the driver venue (``_in_driver``) and of
+    ``manifest_df``.  Batches may differ in nullability, or type an all-null
+    ``from_pylist`` field as null; they are unified before ``schema``
+    (a ``StructType``) is applied."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    tables = [pa.Table.from_batches([b]) for b in batches]
+    tbl = (
+        pa.concat_tables(tables, promote_options="permissive") if tables
+        else target.empty_table()
+    )
+    return spark.createDataFrame(tbl.select(schema.names), schema)
+
+
 def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
     rows = mf.visible_partitions(out_dir)
-    spark_schema = StructType.fromDDL(mf.MANIFEST_DDL)
-    if not rows:
-        return spark.createDataFrame([], spark_schema)
-    # pandas → Arrow createDataFrame path: no Python-RDD workers involved
-    pdf = pd.DataFrame(rows, columns=[f.name for f in spark_schema.fields])
-    return spark.createDataFrame(pdf, spark_schema)
+    return _arrow_df(
+        spark, [pa.RecordBatch.from_pylist(rows, schema=mf.MANIFEST_ARROW)], mf.MANIFEST_SCHEMA
+    )
 
 
 def snapshots_df(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -2825,7 +2847,7 @@ def compact_dataset(
                 row["checksum"] = int(crc)
                 yield emit_sidecar(dst_dir, row)
 
-    src.mapInArrow(compactor, mf.MANIFEST_DDL).write.mode("overwrite").format("noop").save()
+    src.mapInArrow(compactor, mf.MANIFEST_SCHEMA).write.mode("overwrite").format("noop").save()
     if consolidate:
         mf.consolidate_manifest(dst_dir)
     mf.commit_snapshot(dst_dir, "compact", extra={"src": os.path.abspath(src_dir)})
@@ -3028,7 +3050,8 @@ def _sidecar_keep(row: dict, filters: list[tuple] | None) -> bool:
     return True
 
 
-_PLAN_DDL = "block_path string, checksum long"
+_PLAN_ARROW = pa.schema([("block_path", pa.string()), ("checksum", pa.int64())])
+_PLAN_SCHEMA = from_arrow_schema(_PLAN_ARROW)
 
 # Where manifest planning runs, in loose-sidecar equivalents.  A driver
 # loop pays per sidecar (file open + JSON parse); an executor stage pays
@@ -3044,6 +3067,53 @@ def _plan_on_executors(n_loose: int, n_segment_rows: int, stats: bool) -> bool:
     also keeps a consolidated decode off the executor plan's one task per
     ~16k-row spec."""
     return n_loose + n_segment_rows // (1 if stats else 50) > _DISTRIBUTED_PLAN_THRESHOLD
+
+
+def _in_driver(rows: list[dict], cols: list[str] | None, schema) -> bool:
+    """The one venue rule of the per-block read kernels (``decode_table``'s
+    decoder, the DML mask scan's ``scan``): True when the planned ``rows``
+    decode to at most one stripe of raw Arrow (``_STRIPE_TARGET_BYTES``),
+    so the kernel runs in this process and its output becomes a
+    LocalRelation (``_arrow_df``) — no Spark job at all.  A one-task
+    ``mapInArrow`` job costs 0.1-0.3 s before it decodes a byte; a
+    6,000-row LocalRelation's filter + collect ~45 ms (local[2], 4 vCPUs).
+    The size: the per-column ``raw_bytes`` of ``cols`` (None: all) where the
+    plan carries ``codecs`` (filtered reads, DML scans), else the blocks'
+    ``input_bytes``.
+
+    The kernel's output ``schema`` must declare no non-null field below the
+    top level: decoded arrays are nullable all the way down, and pyspark's
+    Arrow → DataFrame path casts them to the declared type, which Arrow
+    refuses for a nested non-null field (``mapInArrow`` takes the declared
+    type as given)."""
+    if any(_nested_not_null(f.dataType) for f in schema.fields):
+        return False
+    total = 0
+    for r in rows:
+        if "codecs" in r:
+            total += sum(
+                int(m.get("raw_bytes") or 0) for c, m in json.loads(r["codecs"]).items()
+                if cols is None or c in cols
+            )
+        else:
+            total += int(r.get("input_bytes") or 0)
+        if total > _STRIPE_TARGET_BYTES:
+            return False
+    return True
+
+
+def _nested_not_null(t) -> bool:
+    """Whether Spark type ``t`` declares a non-null field, element or value."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(t, StructType):
+        return any(not f.nullable or _nested_not_null(f.dataType) for f in t.fields)
+    if isinstance(t, ArrayType):
+        return not t.containsNull or _nested_not_null(t.elementType)
+    if isinstance(t, MapType):
+        return (not t.valueContainsNull or _nested_not_null(t.keyType)
+                or _nested_not_null(t.valueType))
+    return False
 
 
 def _one_commit(out_dir: str, snapshot_id: int | None, read):
@@ -3134,19 +3204,24 @@ def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges
                     names=["block_path", "checksum"],
                 )
 
-    return src.mapInArrow(planner, _PLAN_DDL)
+    return src.mapInArrow(planner, _PLAN_SCHEMA)
 
 
 def _decode_plan(
     spark: SparkSession,
     out_dir: str,
-    filters: list[tuple] | None = None,
-    keep_ranges: list | None = None,
-    snapshot_id: int | None = None,
-    num_tasks: int | None = None,
+    filters: list[tuple] | None,
+    keep_ranges: list | None,
+    snapshot_id: int | None,
+    num_tasks: int | None,
+    cols: list[str] | None,
+    out_schema,
 ):
-    """``decode_table``'s plan: ``(DataFrame of (block_path, checksum) or
-    None when no block survives, delete_file_names)``.  Small manifests
+    """``decode_table``'s plan: ``(source, delete_file_names)``.  ``source``
+    is None when no block survives; one ``(block_path, checksum)``
+    RecordBatch to decode in the driver when the plan is small
+    (``_in_driver`` over the decoded ``cols`` and the decoder's
+    ``out_schema``) and ``num_tasks`` is not given; else a DataFrame of those rows for executors.  Small manifests
     plan on the driver (``plan``); large ones in an executor stage over the
     same specs (``_plan_df_distributed``)."""
     if _plan_on_executors(*mf.manifest_size(out_dir), stats=False):
@@ -3157,12 +3232,17 @@ def _decode_plan(
         if num_tasks:  # else decode runs on the planner's partitioning
             man = man.repartition(max(1, min(int(num_tasks), 4096)))
         return man, names
-    import pandas as pd
-
-    rows, names = plan(out_dir, _plan_cols(filters) + ["output_bytes"], filters,
-                       keep_ranges, snapshot_id)
+    rows, names = plan(out_dir, _plan_cols(filters) + ["input_bytes", "output_bytes"],
+                       filters, keep_ranges, snapshot_id)
     if not rows:
         return None, names
+    src = pa.RecordBatch.from_arrays(
+        [pa.array([r["block_path"] for r in rows], pa.string()),
+         pa.array([int(r["checksum"]) for r in rows], pa.int64())],
+        schema=_PLAN_ARROW,
+    )
+    if num_tasks is None and _in_driver(rows, cols, out_schema):
+        return src, names
     if num_tasks is None:
         # one task per block is right for few big blocks, pathological
         # for many small ones (a Python task holds its slot ~50 ms, ~250 ms
@@ -3173,13 +3253,8 @@ def _decode_plan(
             len(rows),
             max(spark.sparkContext.defaultParallelism * 4, total_bytes // (32 << 20)),
         )
-    pdf = pd.DataFrame(
-        {
-            "block_path": [r["block_path"] for r in rows],
-            "checksum": [int(r["checksum"]) for r in rows],
-        }
-    )
-    return spark.createDataFrame(pdf).repartition(max(1, min(int(num_tasks), 4096))), names
+    src_df = _arrow_df(spark, [src], _PLAN_SCHEMA)
+    return src_df.repartition(max(1, min(int(num_tasks), 4096))), names
 
 
 def decode_table(
@@ -3199,11 +3274,16 @@ def decode_table(
     ``filters`` (ANDed ``(col, op, value)`` triples) skip whole blocks via
     manifest min/max stats *and* are re-applied exactly on the decoded rows.
 
-    Planning reads only the manifest: small manifests in a driver loop
-    (lowest latency), large ones in a Spark stage (scales to 10⁶ blocks);
-    ``_plan_on_executors`` picks by manifest size.
+    Planning reads the manifest: small manifests in a driver loop (lowest
+    latency), large ones in a Spark stage (scales to 10⁶ blocks);
+    ``_plan_on_executors`` picks by manifest size.  A small read — a
+    driver plan whose requested columns decode to at most one stripe of
+    raw Arrow (``_in_driver``), with no ``num_tasks`` — decodes its blocks
+    when ``decode_table`` is called, in this process, and returns a
+    LocalRelation over the result: a point lookup's collect starts no
+    Spark job.  Every other read decodes lazily, in a ``mapInArrow`` stage.
 
-    ``on_corrupt`` (with ``verify_checksums``): 'error' fails the job on a
+    ``on_corrupt`` (with ``verify_checksums``): 'error' fails the read on a
     checksum mismatch; 'skip' quarantines the block (logs to stderr, decodes
     the rest; any other read error still fails the job) — the at-scale
     triage mode: one rotted block of 10⁶ shouldn't kill a day-long read,
@@ -3214,6 +3294,22 @@ def decode_table(
     analog).  Within a dataset dir partitions are append-only, so a
     snapshot is a pid-range set and planning simply restricts to it,
     including whole-segment pruning of disjoint segments."""
+    return _decode(spark, out_dir, columns, num_tasks, filters, verify_checksums,
+                   on_corrupt, snapshot_id)[0]
+
+
+def _decode(
+    spark: SparkSession,
+    out_dir: str,
+    columns: list[str] | None = None,
+    num_tasks: int | None = None,
+    filters: list[tuple] | None = None,
+    verify_checksums: bool = False,
+    on_corrupt: str = "error",
+    snapshot_id: int | None = None,
+) -> tuple[DataFrame, bool]:
+    """``decode_table`` → ``(DataFrame, whether it was decoded in the
+    driver)``."""
     if on_corrupt not in ("error", "skip"):
         raise ValueError(f"on_corrupt must be 'error' or 'skip', got {on_corrupt!r}")
     if snapshot_id is not None:
@@ -3262,18 +3358,15 @@ def decode_table(
         out_schema = StructType([f for f in full.fields if f.name in want])
     else:
         out_schema = full
-    man, names = _decode_plan(spark, out_dir, filters, keep_ranges, snapshot_id, num_tasks)
-    if man is None:
-        return _to_logical(spark.createDataFrame([], out_schema))
+    decode_cols = (list(columns) + extra_filter_cols) if columns else None
+    src, names = _decode_plan(
+        spark, out_dir, filters, keep_ranges, snapshot_id, num_tasks, decode_cols, out_schema
+    )
+    if src is None:
+        return _to_logical(_arrow_df(spark, [], out_schema)), True
     masks_raw: dict = dl.load_raw(out_dir, names) if names else {}
 
-    decode_cols = (list(columns) + extra_filter_cols) if columns else None
-    masks_bc = (
-        spark.sparkContext.broadcast(masks_raw) if masks_raw else None
-    )
-
-    def decoder(batches):
-        masks = masks_bc.value if masks_bc is not None else {}
+    def decoder(batches, masks):
         for batch in batches:
             for path, crc in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 live = read_live(
@@ -3290,7 +3383,15 @@ def decode_table(
 
                     print(f"rugo_spark: QUARANTINED {e}", file=_sys.stderr)
 
-    out = man.mapInArrow(decoder, out_schema)
+    in_driver = isinstance(src, pa.RecordBatch)
+    if in_driver:
+        out = _arrow_df(spark, decoder([src], masks_raw), out_schema)
+    else:
+        masks_bc = spark.sparkContext.broadcast(masks_raw) if masks_raw else None
+        out = src.mapInArrow(
+            lambda it: decoder(it, masks_bc.value if masks_bc is not None else {}),
+            out_schema,
+        )
     if filters:
         import pyspark.sql.functions as F
 
@@ -3308,7 +3409,7 @@ def decode_table(
                 )
     if extra_filter_cols:
         out = out.select(*columns)
-    return _to_logical(out)
+    return _to_logical(out), in_driver
 
 
 def _subtract_ranges(a: list, b: list) -> list[list[int]]:

@@ -17,6 +17,7 @@ import json
 import os
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_schema
 
 SCHEMA_FILE = "_schema.json"
 PLAN_FILE = "_plan.json"
@@ -24,11 +25,7 @@ CODEC_PLANS_FILE = "_codec_plans.json"
 MANIFEST_DIR = "manifest"
 BLOCKS_DIR = "blocks"
 
-# Spark-side manifest row schema (applyInArrow output)
-MANIFEST_DDL = (
-    "partition_id int, n_rows long, n_tokens long, input_bytes long, "
-    "output_bytes long, block_path string, checksum long, codecs string"
-)
+# the manifest row schema every block producer task yields
 MANIFEST_ARROW = pa.schema(
     [
         ("partition_id", pa.int32()),
@@ -41,6 +38,9 @@ MANIFEST_ARROW = pa.schema(
         ("codecs", pa.string()),
     ]
 )
+# its Spark form, built in Python: a DDL string would cost a JVM parse at
+# every producer's mapInArrow/applyInArrow and every manifest_df
+MANIFEST_SCHEMA = from_arrow_schema(MANIFEST_ARROW)
 
 
 def write_schema(

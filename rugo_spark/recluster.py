@@ -241,7 +241,7 @@ def recluster_dataset(
 
         folded = (
             bands_df.groupBy("__rugo_gid")
-            .applyInArrow(fold, mf.MANIFEST_DDL)
+            .applyInArrow(fold, mf.MANIFEST_SCHEMA)
             .collect()
         )
         rewritten_rows = sum(int(r["n_rows"]) for r in folded) or 0

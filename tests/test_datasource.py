@@ -184,6 +184,30 @@ def test_append_schema_mismatch_rejected(spark, doc_pdf, tmp_out):
     assert spark.read.format("rugo").load(tmp_out).count() == 2000
 
 
+def test_append_keeps_durable_payload_and_refuses_constraints(spark, doc_pdf, tmp_out):
+    from rugo_spark import manifest as mf
+    from rugo_spark.engine import set_constraint
+
+    df = spark.createDataFrame(doc_pdf)
+    encode_table(df.filter(F.col("doc_id") < 1000), tmp_out, key_col="doc_id",
+                 size_col="n_chars", num_partitions=2)
+    zorder = {"columns": ["doc_id"]}
+    mf.write_schema_payload(tmp_out, dict(mf.read_schema_payload(tmp_out), zorder=zorder))
+    df.filter((F.col("doc_id") >= 1000) & (F.col("doc_id") < 1500)).repartition(2) \
+        .write.format("rugo").mode("append").save(tmp_out)
+    payload = mf.read_schema_payload(tmp_out)
+    assert (payload.get("size_col"), payload.get("zorder")) == ("n_chars", zorder)
+
+    set_constraint(tmp_out, "pos_chars", "n_chars >= 0")
+    with pytest.raises(Exception, match="append_table"):
+        df.filter(F.col("doc_id") >= 1500).repartition(2) \
+            .write.format("rugo").mode("append").save(tmp_out)
+    payload = mf.read_schema_payload(tmp_out)
+    assert payload["constraints"] == {"pos_chars": "n_chars >= 0"}
+    assert payload.get("zorder") == zorder
+    assert decode_table(spark, tmp_out).count() == 1500
+
+
 def test_failed_overwrite_preserves_old_data(spark, doc_pdf, tmp_out):
     df = spark.createDataFrame(doc_pdf)
     df.repartition(2).write.format("rugo").mode("overwrite").save(tmp_out)

@@ -39,14 +39,20 @@ def test_filter_and_columns_push_into_scan(spark):
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
 
-def test_decode_is_shuffle_free(spark, tmp_out):
+def test_decode_is_shuffle_free(spark, tmp_out, monkeypatch):
+    from rugo_spark import engine
     from rugo_spark.engine import decode_table, encode_table
 
     pdf = pd.DataFrame({"k": [f"k{i}" for i in range(500)], "v": list(range(500))})
     encode_table(spark.createDataFrame(pdf), tmp_out, key_col="k", num_partitions=4)
+    # a small read decodes in the driver: a local scan, no exchange at all
     plan = _plan(decode_table(spark, tmp_out))
-    # one repartition of PATHS (tiny strings) feeds the decoder; the decoded
-    # DATA never shuffles — no Exchange above the MapInArrow decoder
+    assert "LocalTableScan" in plan and "MapInArrow" not in plan and "Exchange" not in plan
+    # above the driver venue's limit: one repartition of PATHS (tiny
+    # strings) feeds the decoder; the decoded DATA never shuffles — no
+    # Exchange above the MapInArrow decoder
+    monkeypatch.setattr(engine, "_STRIPE_TARGET_BYTES", -1)
+    plan = _plan(decode_table(spark, tmp_out))
     assert plan.count("MapInArrow") == 1
     decoder_part = plan.split("MapInArrow")[0]
     assert "Exchange" not in decoder_part
