@@ -537,6 +537,84 @@ def _files_signature(df: DataFrame) -> list:
     return sig
 
 
+# plan nodes that only pass a scan's rows on: a Parquet scan under these
+# and nothing else yields its files' rows as they lie
+_SCAN_WRAPPERS = ("WholeStageCodegenExec", "ColumnarToRowExec", "InputAdapter")
+_PARQUET_FORMAT = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
+
+
+def _has_temporal(t: pa.DataType) -> bool:
+    return pa.types.is_temporal(t) or any(
+        _has_temporal(t.field(i).type) for i in range(t.num_fields)
+    )
+
+
+def _parquet_splits(df: DataFrame) -> list[list[str]] | None:
+    """Spark's own file splits of a plain Parquet scan: one list of local
+    file paths per ``FilePartition``, in index order, from the executed
+    plan's ``FileSourceScanExec.inputRDD``.  Read with pyarrow in that
+    order, a split gives the rows Spark would hand ``mapInArrow``, with the
+    same Arrow types, and the split index is the task's partition id.
+
+    None (read through ``df`` instead) unless the plan is the bare scan
+    with no partition columns, no data or partition filters (so none
+    pushed) and no bucketing; every split entry covers a whole local file;
+    Spark would not skip corrupt or missing files; no column is a date,
+    timestamp or interval (Spark may rebase legacy-calendar values and
+    reads timestamps into the session zone); and every file's footer
+    schema equals ``_arrow_schema_of(df)``.  Split packing and the
+    row-group midpoint rule stay Spark's: partial-file splits fall back.
+    Spark Connect frames and py4j errors give None too."""
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JError
+
+    try:
+        node = df._jdf.queryExecution().executedPlan()
+        while node.getClass().getSimpleName() in _SCAN_WRAPPERS:
+            node = node.children().apply(0)
+        if node.getClass().getSimpleName() != "FileSourceScanExec":
+            return None
+        rel = node.relation()
+        if (rel.fileFormat().getClass().getName() != _PARQUET_FORMAT
+                or rel.partitionSchema().length() or node.bucketedScan()
+                or node.dataFilters().nonEmpty() or node.partitionFilters().nonEmpty()):
+            return None
+        opts, it = {}, rel.options().iterator()
+        while it.hasNext():
+            kv = it.next()
+            opts[kv._1().lower()] = kv._2()
+        for flag in ("ignoreCorruptFiles", "ignoreMissingFiles"):
+            on = opts.get(flag.lower(), _conf_get(df.sparkSession.conf, f"spark.sql.files.{flag}"))
+            if str(on).strip().lower() == "true":
+                return None
+        target = _arrow_schema_of(df)
+        if any(_has_temporal(f.type) for f in target):
+            return None
+        parts = node.inputRDD().filePartitions()
+        splits = []
+        for j in range(parts.size()):
+            part = parts.apply(j)
+            if part.index() != j:
+                return None
+            files = []
+            for pf in part.files():
+                uri = pf.filePath().toUri()
+                if uri.getScheme() != "file" or pf.start() != 0 or pf.length() != pf.fileSize():
+                    return None
+                files.append(uri.getPath())
+            splits.append(files)
+        paths = {p for files in splits for p in files}
+        if not paths or any(
+            not pq.read_schema(p).equals(target, check_metadata=False) for p in paths
+        ):
+            return None
+        return splits
+    # no _jdf (Spark Connect), a py4j call that fails, a footer pyarrow
+    # cannot read, a type with no Arrow form: Spark reads the input itself
+    except (AttributeError, TypeError, OSError, pa.ArrowException, Py4JError):
+        return None
+
+
 def _plan_signature(df: DataFrame) -> str:
     """Cross-JVM-deterministic signature of the logical plan, computed
     WITHOUT executing the query (df.rdd.getNumPartitions would finalize AQE
@@ -617,10 +695,20 @@ def encode_table_maponly(
 
     For inputs that are already size-balanced (e.g. a well-bucketed Iceberg
     table) the quantile repartition is pure overhead — this path encodes
-    splits in place (`mapInArrow`, zero data movement).  Partition ids come
-    from the task's split index, which is deterministic for a fixed input
-    layout + parallelism; resume re-scans but skips re-encoding completed
-    splits.  The input layout is fingerprinted into ``_schema.json``; a
+    splits in place (zero data movement).  Partition ids come from the
+    split index, which is deterministic for a fixed input layout +
+    parallelism; resume skips re-encoding completed splits.
+
+    Where a split is read: with a ``sort_key`` and a ``df`` that is a plain
+    Parquet scan (``_parquet_splits``: no filter, projection, partition
+    column, bucketing, partial-file split or temporal column, and footers
+    matching ``df``'s schema) of at least 1 MB of files
+    (``_SPLIT_SOURCE_MIN_BYTES``), the encode task reads Spark's own file
+    split with pyarrow — no JVM decode and no row-to-Arrow transfer — and
+    a resume reads only the missing splits.  Any other ``df``, and any
+    encode without ``sort_key``, runs ``df.mapInArrow``: Spark reads the
+    split and hands its rows to the task.  Blocks are byte-identical
+    either way.  The input layout is fingerprinted into ``_schema.json``; a
     resume against a changed layout raises (``on_layout_change='error'``) or
     clears the stale sidecars+blocks (``'clear'``) instead of silently mixing
     old and new data.  Use `encode_table` when the input is skewed.
@@ -652,52 +740,135 @@ def encode_table_maponly(
     # after the first run — the schema rewrite below is unconditional
     extra.update(mf.durable_payload(prev))
     mf.write_schema(out_dir, _arrow_schema_of(df), df.schema.json(), extra=extra)
-    encoder = _split_encoder(spark, out_dir, sort_key, size_col, plans)
-    df.mapInArrow(encoder, mf.MANIFEST_SCHEMA).write.mode("overwrite").format("noop").save()
+    _encode_splits(df, out_dir, sort_key, size_col, plans)
     mf.commit_snapshot(out_dir, "encode")
     return manifest_df(spark, out_dir)
 
 
-def _split_encoder(spark, out_dir, sort_key, size_col, plans, pid_base: int = 0):
-    """One-split-one-block encoder closure shared by the map-only and append
-    paths (``pid_base`` offsets the append band).  Skip-if-sidecar-exists is
-    the per-split resume contract; pids whose sidecar was folded into a
-    manifest segment (loose file deleted) are skipped via the segment pid
-    set computed once on the driver — without it a resume after
-    consolidation would pointlessly re-encode every consolidated split.
-    The set ships as a BROADCAST sorted int64 array (once per executor, a
-    few MB at 10⁶ pids), not a closure-captured frozenset re-serialized
-    with every task (review r5)."""
+# Input file bytes below which an encode reads through ``df.mapInArrow``
+# even when ``_parquet_splits`` would give its splits: finding them costs
+# ~20 ms in the driver (physical plan, FileScanRDD, footers), which a small
+# input does not win back.  Measured at local[2], 4 vCPUs: one 0.15 MB
+# token file encodes ~20 ms slower through the split source, one 1.1 MB
+# token file ~50 ms faster; a flat 0.27 MB file ties, a 0.93 MB one is
+# ~90 ms faster.
+_SPLIT_SOURCE_MIN_BYTES = 1 << 20
+
+
+def _pid_done(out_dir: str, seg, pid: int) -> bool:
+    """Whether block ``pid`` is already encoded: its loose sidecar exists or
+    a manifest segment holds it (``seg``: the segments' sorted pid array)."""
     import numpy as np
 
+    i = int(np.searchsorted(seg, pid))
+    return (i < len(seg) and int(seg[i]) == pid) or os.path.exists(
+        mf.sidecar_path(out_dir, pid)
+    )
+
+
+def _read_split(paths: list[str]) -> pa.Table | None:
+    """One Spark file split read with pyarrow, files in split order; None
+    when it holds no rows (Spark hands ``mapInArrow`` no batch then).
+    Single-threaded: threaded reads raised the peak RSS of a process
+    encoding eight 4,500-doc splits from 191 to 244-249 MB."""
+    import pyarrow.parquet as pq
+
+    tbl = pa.concat_tables([pq.ParquetFile(p).read(use_threads=False) for p in paths])
+    return tbl if tbl.num_rows else None
+
+
+def _encode_splits(df: DataFrame, out_dir, sort_key, size_col, plans, pid_base: int = 0) -> None:
+    """One input split → one block, id ``pid_base`` + the split's index
+    (``pid_base`` offsets an append's band): the map-only encode and the
+    append run this.  Skip-if-encoded is the per-split resume contract;
+    pids whose sidecar was folded into a manifest segment (loose file
+    deleted) count as encoded through the segment pid set computed once on
+    the driver, which ships as a BROADCAST sorted int64 array (once per
+    executor, a few MB at 10⁶ pids), not a closure-captured frozenset
+    re-serialized with every task.
+
+    Two task sources feed the one per-split body (resume check, then
+    ``encode_block_row``, then ``emit_sidecar``):
+
+    - a plain Parquet scan (``_parquet_splits``) of at least
+      ``_SPLIT_SOURCE_MIN_BYTES``, encoded with a ``sort_key``: Spark's own
+      file splits, read in the task with pyarrow
+      — no JVM Parquet decode and no row-to-Arrow transfer into Python.
+      The splits not yet encoded are dealt round-robin over
+      ``min(splits, defaultParallelism)`` tasks of a ``spark.range``
+      source, so a resume reads only missing splits;
+    - anything else: ``df.mapInArrow``, one task per split of ``df``.
+
+    The sort is what makes the two sources write the same bytes: it lays
+    the block's table out afresh, while an unsorted table keeps the layout
+    its rows arrived in, and ``Table.nbytes`` (the sidecar's
+    ``input_bytes``, the stripe size) follows that layout.  A pyarrow read
+    keeps all-valid validity bitmaps and per-file chunks that Spark's
+    Arrow stream drops (a 4,500-row split: 7,971,791 against 7,734,636
+    bytes), and Spark cuts its batches by ``maxBytesPerBatch`` as well as
+    by rows, so unsorted encodes stay on ``df.mapInArrow``."""
+    from pyspark import TaskContext
+
+    import numpy as np
+
+    spark = df.sparkSession
     blocks_dir = os.path.join(out_dir, mf.BLOCKS_DIR)
     if mf.segment_catalog(out_dir):
         seg_arr = np.array(sorted(mf.segment_pids(out_dir)), dtype=np.int64)
     else:
         seg_arr = np.empty(0, dtype=np.int64)
+
+    splits = None
+    if sort_key is not None and sum(
+        f[1] for f in _files_signature(df) if len(f) > 1
+    ) >= _SPLIT_SOURCE_MIN_BYTES:
+        splits = _parquet_splits(df)
+    if splits is not None:
+        work = [
+            (pid_base + i, files) for i, files in enumerate(splits)
+            if not _pid_done(out_dir, seg_arr, pid_base + i)
+        ]
+        if not work:
+            return
+        n = min(len(work), spark.sparkContext.defaultParallelism)
     seg_bc = spark.sparkContext.broadcast(seg_arr)
 
-    def encoder(batches):
-        import numpy as np
-        from pyspark import TaskContext
-
-        pid = pid_base + TaskContext.get().partitionId()
-        seg = seg_bc.value
-        i = int(np.searchsorted(seg, pid))
-        if (i < len(seg) and int(seg[i]) == pid) or os.path.exists(
-            mf.sidecar_path(out_dir, pid)
-        ):
-            return  # resume: split already encoded
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list)
+    def block(pid: int, read):
+        if _pid_done(out_dir, seg_bc.value, pid):
+            return None  # resume: split already encoded
+        held = [read()]
+        if held[0] is None:
+            return None
         path = os.path.join(blocks_dir, f"part-{pid:06d}.rgb")
-        yield emit_sidecar(out_dir, encode_block_row(
-            tbl, path, pid, sort_key=sort_key, size_col=size_col, plans=plans
+        # popped into the call, so the argument is the table's only
+        # reference and the sort in encode_block_row frees the unsorted
+        # copy (a held table: 203-212 MB peak RSS against 191, same run)
+        return emit_sidecar(out_dir, encode_block_row(
+            held.pop(), path, pid, sort_key=sort_key, size_col=size_col, plans=plans
         ))
 
-    return encoder
+    if splits is None:
+        def encoder(batches):
+            def read():
+                batch_list = list(batches)
+                return pa.Table.from_batches(batch_list) if batch_list else None
+
+            row = block(pid_base + TaskContext.get().partitionId(), read)
+            if row is not None:
+                yield row
+
+        src = df
+    else:
+        def encoder(batches):
+            for _ in batches:  # the range rows only size the task set
+                pass
+            for pid, files in work[TaskContext.get().partitionId()::n]:
+                row = block(pid, lambda files=files: _read_split(files))
+                if row is not None:
+                    yield row
+
+        src = spark.range(n, numPartitions=n)
+    src.mapInArrow(encoder, mf.MANIFEST_SCHEMA).write.mode("overwrite").format("noop").save()
 
 
 def encode_table_sorted(
@@ -878,6 +1049,13 @@ def append_table(
     key disjointness — run ``compact_dataset(sort_key=...)`` afterwards to
     restore clustering (compaction also rewrites ids densely, reclaiming
     band space).
+
+    Where a split is read follows ``encode_table_maponly``: a plain
+    Parquet scan of at least 1 MB appended with a ``sort_key`` is read by
+    the encode task itself (``_parquet_splits``); anything else — a
+    smaller input, a filtered, projected or evolved frame (the
+    logical-to-physical select above), a frame in memory, update's decoded
+    source, or no ``sort_key`` — goes through ``df.mapInArrow``.
 
     Returns the manifest rows of THIS append's band."""
     spark = df.sparkSession
@@ -1060,8 +1238,7 @@ def append_table(
                 k: v for k, v in prev.items() if not k.startswith("_")
             }
         _atomic_write(marker, json.dumps(reservation).encode())
-    encoder = _split_encoder(spark, out_dir, sort_key, size_col, plans, pid_base=base)
-    df.mapInArrow(encoder, mf.MANIFEST_SCHEMA).write.mode("append").format("noop").save()
+    _encode_splits(df, out_dir, sort_key, size_col, plans, pid_base=base)
     if new_names:
         # widen the dataset schema to the union, atomically, BEFORE the
         # completion flip.  In the crash window between the two, readers see
@@ -2372,13 +2549,64 @@ def _arrow_schema_of(df: DataFrame) -> pa.Schema:
     return to_arrow_schema(df.schema)
 
 
+def _same_but_nulls(a: pa.DataType, t: pa.DataType) -> bool:
+    """Whether Arrow types ``a`` and ``t`` differ at most in the
+    nullability of nested fields."""
+    if a.id != t.id or a.num_fields != t.num_fields:
+        return False
+    if not t.num_fields:
+        return a == t
+    return all(
+        a.field(i).name == t.field(i).name and _same_but_nulls(a.field(i).type, t.field(i).type)
+        for i in range(t.num_fields)
+    )
+
+
+def _without_validity(a: pa.Array) -> pa.Array:
+    """``a`` over the same buffers, with no validity bitmap."""
+    t = a.type
+    if pa.types.is_struct(t):
+        return pa.StructArray.from_arrays([a.field(i) for i in range(t.num_fields)], fields=list(t))
+    kids = [a.values] if t.num_fields else None
+    return pa.Array.from_buffers(t, len(a), [None] + a.buffers()[1:t.num_buffers], 0, a.offset, kids)
+
+
+def _as_declared(arr: pa.Array, t: pa.DataType) -> pa.Array:
+    """``arr`` rebuilt, without copying data, as ``t``, which it matches up
+    to nested nullability (``_same_but_nulls``).  A non-null struct field
+    whose nulls all sit under null struct slots loses its validity bitmap:
+    decoded structs keep such nulls, and pyspark's cast refuses any null in
+    a non-null field.  A null under a valid slot stays, and the cast
+    reports it."""
+    import pyarrow.compute as pc
+
+    if pa.types.is_struct(t):
+        kids = []
+        for i, f in enumerate(t):
+            kid = _as_declared(arr.field(i), f.type)
+            if (not f.nullable and kid.null_count
+                    and not pc.any(pc.and_(kid.is_null(), arr.is_valid())).as_py()):
+                kid = _without_validity(kid)
+            kids.append(kid)
+        mask = arr.is_null() if arr.null_count else None
+        return pa.StructArray.from_arrays(kids, fields=list(t), mask=mask)
+    if t.num_fields:  # list, large_list, map: over the declared child
+        kids = [_as_declared(arr.values, t.field(0).type)]
+        return pa.Array.from_buffers(
+            t, len(arr), arr.buffers()[:t.num_buffers], arr.null_count, arr.offset, kids
+        )
+    return arr
+
+
 def _arrow_df(spark: SparkSession, batches, schema) -> DataFrame:
     """A DataFrame over Arrow batches held in this process: a LocalRelation,
     so Spark's filter, select and collect over it start no job.  The one
     Arrow → DataFrame call of the driver venue (``_in_driver``) and of
     ``manifest_df``.  Batches may differ in nullability, or type an all-null
     ``from_pylist`` field as null; they are unified before ``schema``
-    (a ``StructType``) is applied."""
+    (a ``StructType``) is applied.  A column that matches its target up to
+    nested nullability is rebuilt as the target type (``_as_declared``),
+    which pyspark's cast would refuse for a non-null nested field."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = to_arrow_schema(schema)
@@ -2387,7 +2615,13 @@ def _arrow_df(spark: SparkSession, batches, schema) -> DataFrame:
         pa.concat_tables(tables, promote_options="permissive") if tables
         else target.empty_table()
     )
-    return spark.createDataFrame(tbl.select(schema.names), schema)
+    cols = []
+    for f in target:
+        col = tbl.column(f.name)
+        if _same_but_nulls(col.type, f.type):
+            col = pa.chunked_array([_as_declared(c, f.type) for c in col.chunks], f.type)
+        cols.append(col)
+    return spark.createDataFrame(pa.Table.from_arrays(cols, names=target.names), schema)
 
 
 def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -2651,12 +2885,9 @@ def metadata_agg(
         fields.append(pa.field(f"nulls_{_p2l.get(c, c)}", pa.int64()))
         arrays.append(pa.array([int(m.get("null_count") or 0)], pa.int64()))
     tbl = pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-    try:
-        # PySpark 4 takes pa.Table directly — keeps declared types exactly
-        # (None min/max stays NULL of the column type, not a pandas NaN double)
-        return spark.createDataFrame(tbl)
-    except TypeError:  # older API: pandas fallback
-        return spark.createDataFrame(tbl.to_pandas())
+    # a pa.Table keeps declared types exactly (None min/max stays NULL of
+    # the column type, not a pandas NaN double)
+    return spark.createDataFrame(tbl)
 
 
 def _member_stripes(row: dict) -> list[tuple[bytes, dict]]:
@@ -3079,14 +3310,9 @@ def _in_driver(rows: list[dict], cols: list[str] | None, schema) -> bool:
     6,000-row LocalRelation's filter + collect ~45 ms (local[2], 4 vCPUs).
     The size: the per-column ``raw_bytes`` of ``cols`` (None: all) where the
     plan carries ``codecs`` (filtered reads, DML scans), else the blocks'
-    ``input_bytes``.
-
-    The kernel's output ``schema`` must declare no non-null field below the
-    top level: decoded arrays are nullable all the way down, and pyspark's
-    Arrow → DataFrame path casts them to the declared type, which Arrow
-    refuses for a nested non-null field (``mapInArrow`` takes the declared
-    type as given)."""
-    if any(_nested_not_null(f.dataType) for f in schema.fields):
+    ``input_bytes``.  A ``schema`` pyspark's Arrow → DataFrame path cannot
+    take (``_localize_drops_not_null``) keeps the ``mapInArrow`` stage."""
+    if any(_localize_drops_not_null(f.dataType) for f in schema.fields):
         return False
     total = 0
     for r in rows:
@@ -3102,18 +3328,32 @@ def _in_driver(rows: list[dict], cols: list[str] | None, schema) -> bool:
     return True
 
 
-def _nested_not_null(t) -> bool:
-    """Whether Spark type ``t`` declares a non-null field, element or value."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
+def _localize_drops_not_null(t) -> bool:
+    """Whether Spark type ``t`` has a non-null field, element or value in a
+    struct, array or map that also holds a nested or timestamp child.
+    pyspark's ``createDataFrame(pa.Table, schema)`` rebuilds every such
+    container for its timestamp localization with all children nullable,
+    and its cast back to ``t`` then refuses (seen on
+    ``struct<..., when: struct<d: timestamp> NOT NULL>``)."""
+    from pyspark.sql.types import (
+        ArrayType, MapType, StructType, TimestampNTZType, TimestampType,
+    )
 
     if isinstance(t, StructType):
-        return any(not f.nullable or _nested_not_null(f.dataType) for f in t.fields)
-    if isinstance(t, ArrayType):
-        return not t.containsNull or _nested_not_null(t.elementType)
-    if isinstance(t, MapType):
-        return (not t.valueContainsNull or _nested_not_null(t.keyType)
-                or _nested_not_null(t.valueType))
-    return False
+        kids = [(f.dataType, f.nullable) for f in t.fields]
+    elif isinstance(t, ArrayType):
+        kids = [(t.elementType, t.containsNull)]
+    elif isinstance(t, MapType):
+        kids = [(t.keyType, True), (t.valueType, t.valueContainsNull)]
+    else:
+        return False
+    rebuilt = any(
+        isinstance(k, (StructType, ArrayType, MapType, TimestampType, TimestampNTZType))
+        for k, _ in kids
+    )
+    return (rebuilt and not all(n for _, n in kids)) or any(
+        _localize_drops_not_null(k) for k, _ in kids
+    )
 
 
 def _one_commit(out_dir: str, snapshot_id: int | None, read):
@@ -3171,11 +3411,9 @@ def _spec_src_df(spark: SparkSession, **cols: list):
     """A task source frame: one row per unit of work (a candidate block, a
     ~256-sidecar chunk, a segment row-group slice), one task per row up to
     4 waves/core.  ``cols``: equal-length column lists."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(cols)
-    n_tasks = max(1, min(len(pdf), spark.sparkContext.defaultParallelism * 4))
-    return spark.createDataFrame(pdf).repartition(n_tasks)
+    tbl = pa.table(cols)
+    n_tasks = max(1, min(tbl.num_rows, spark.sparkContext.defaultParallelism * 4))
+    return _arrow_df(spark, tbl.to_batches(), from_arrow_schema(tbl.schema)).repartition(n_tasks)
 
 
 def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges=None):

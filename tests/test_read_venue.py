@@ -136,25 +136,51 @@ def test_corrupt_block_under_both_venues(spark, tmp_out):
     assert 0 < len(local) < 400
 
 
-def test_nested_not_null_field_keeps_the_read_on_executors(spark, tmp_out):
-    """pyspark's Arrow → DataFrame path cannot cast decoded (nullable)
-    arrays to a non-null nested field, so such reads stay on executors;
-    a top-level NOT NULL column does not need to."""
+def test_nested_not_null_field_reads_in_the_driver(spark, tmp_out):
+    """A non-null nested field no longer keeps a small read on executors:
+    ``_arrow_df`` rebuilds decoded columns as the declared type, including
+    a struct whose null slots hold nulls in its non-null children."""
     import pyspark.sql.functions as F
 
+    info = F.struct(F.col("id").alias("a"), (F.col("id") * 2).alias("b"))
     df = spark.range(300).select(
         F.col("id").alias("k"),
-        F.struct(F.col("id").alias("a"), (F.col("id") * 2).alias("b")).alias("info"),
+        info.alias("info"),
+        F.when(F.col("id") % 3 == 0, F.lit(None)).otherwise(info).alias("maybe"),
+        F.array(F.when(F.col("id") % 2 == 0, F.lit(None)).otherwise(info)).alias("arr"),
     )
     assert not df.schema["k"].nullable and not df.schema["info"].dataType["a"].nullable
+    assert df.schema["maybe"].nullable and not df.schema["maybe"].dataType["a"].nullable
+    encode_table(df, tmp_out, key_col="k", num_partitions=2)
+    kw = dict(filters=[("k", "<", 10)])
+    rows, jobs = _jobs(spark, lambda: _rows(decode_table(spark, tmp_out, **kw)))
+    assert jobs == []
+    assert rows == _rows(decode_table(spark, tmp_out, num_tasks=1, **kw))
+    assert [(k, info["b"]) for k, info, _, _ in rows] == [(i, 2 * i) for i in range(10)]
+    assert [k for k, _, maybe, _ in rows if maybe is None] == [0, 3, 6, 9]
+    assert [k for k, _, _, arr in rows if arr[0] is None] == [0, 2, 4, 6, 8]
+    flat, jobs = _jobs(spark, lambda: _rows(decode_table(spark, tmp_out, columns=["k"], **kw)))
+    assert jobs == [] and flat == [(i,) for i in range(10)]
+
+
+def test_non_null_field_beside_a_nested_timestamp_stays_on_executors(spark, tmp_out):
+    """pyspark's Arrow → DataFrame path rebuilds a struct holding a nested
+    or timestamp field with nullable children and then refuses to cast a
+    non-null one back, so that read keeps its Spark job."""
+    import pyspark.sql.functions as F
+
+    ts = F.timestamp_seconds(F.col("id") * 60)
+    df = spark.range(300).select(
+        F.col("id").alias("k"),
+        F.struct((F.col("id") * 2).alias("b"), F.struct(ts.alias("d")).alias("when")).alias("info"),
+    )
+    assert not df.schema["info"].dataType["when"].nullable
     encode_table(df, tmp_out, key_col="k", num_partitions=2)
     kw = dict(filters=[("k", "<", 10)])
     rows, jobs = _jobs(spark, lambda: _rows(decode_table(spark, tmp_out, **kw)))
     assert jobs
-    assert rows == _rows(decode_table(spark, tmp_out, num_tasks=1, **kw))
     assert [(k, info["b"]) for k, info in rows] == [(i, 2 * i) for i in range(10)]
-    flat, jobs = _jobs(spark, lambda: _rows(decode_table(spark, tmp_out, columns=["k"], **kw)))
-    assert jobs == [] and flat == [(i,) for i in range(10)]
+    assert rows == _rows(decode_table(spark, tmp_out, num_tasks=1, **kw))
 
 
 def _entries(out: str, name: str | None) -> list[dict]:
