@@ -33,6 +33,7 @@ from rugo_spark.codecs import (
     CODEC_BY_ID,
     INT_CODEC_IDS,
     INT_CODECS,
+    bss,
     fsst,
     general,
 )
@@ -124,8 +125,13 @@ def _validity(arr: pa.Array) -> tuple[np.ndarray | None, int]:
     return valid, nulls
 
 
-def _validity_buffer(valid: np.ndarray) -> pa.Buffer:
-    return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
+def _buf(arr: np.ndarray) -> pa.Buffer:
+    """A contiguous numpy array's memory as an Arrow buffer, without a copy
+    unless its address is not 8-byte aligned (a view at an odd offset of a
+    block's bytes); the buffer keeps the array alive."""
+    if arr.ctypes.data % 8:
+        arr = arr.copy()
+    return pa.py_buffer(arr)
 
 
 # ---------------------------------------------------------------- encode
@@ -445,13 +451,13 @@ def encode_array(arr: pa.Array | pa.ChunkedArray, plan: dict | None = None) -> t
 
 # ---------------------------------------------------------------- decode
 
-def _decode_int_body(body: memoryview) -> np.ndarray:
+def _decode_int_body(body: memoryview, dtype=np.int64) -> np.ndarray:
     codec = CODEC_BY_ID[body[0]]
     payload = general.unwrap(body[1:])
-    return INT_CODECS[codec][1](payload)
+    return INT_CODECS[codec][1](payload, dtype)
 
 
-def _decode_bytes_body(body: memoryview) -> bytes:
+def _decode_bytes_body(body: memoryview):
     codec = CODEC_BY_ID[body[0]]
     payload = general.unwrap(body[1:])
     return BYTES_CODECS[codec][1](payload)
@@ -478,19 +484,19 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
         off += 8
         packed = np.frombuffer(mv[off : off + plen], dtype=np.uint8)
         off += plen
-        valid = np.unpackbits(packed, count=n, bitorder="little").astype(bool)
-        vbuf = _validity_buffer(valid)
+        valid = np.unpackbits(packed, count=n, bitorder="little").view(bool)
+        vbuf = _buf(packed)  # written by packbits: the same bits, zero padded
 
     if kind == KIND_INT:
         body, off = _read_frame(mv, off)
-        dense = _decode_int_body(body)
         storage = np.dtype(_storage_np_dtype(typ))
-        vals = _expand(dense, valid).astype(storage)  # uint64 wraps = bit-view inverse
+        # decoded straight to the storage width (uint64 wraps = bit-view inverse)
+        vals = _expand(_decode_int_body(body, storage), valid)
         if np.issubdtype(storage, np.unsignedinteger):
             prim = {8: pa.uint64(), 4: pa.uint32(), 2: pa.uint16(), 1: pa.uint8()}[storage.itemsize]
         else:
             prim = {8: pa.int64(), 4: pa.int32(), 2: pa.int16(), 1: pa.int8()}[storage.itemsize]
-        out = pa.Array.from_buffers(prim, n, [vbuf, pa.py_buffer(vals.tobytes())])
+        out = pa.Array.from_buffers(prim, n, [vbuf, _buf(vals)])
         return out if prim == typ else out.view(typ)
     if kind == KIND_FLOAT:
         body, off = _read_frame(mv, off)
@@ -501,15 +507,14 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
             ints = _decode_int_body(body[3:])
             dense_v = (ints.astype(np.float64) / np.float64(10.0**e)).astype(dt)
         else:
-            raw = np.frombuffer(general.unwrap(body[2:]), dtype=np.uint8)
-            if mode == 1 and len(raw):
-                dense_v = (
-                    np.ascontiguousarray(raw.reshape(itemsize, -1).T).view(dt).ravel()
-                )
+            raw = general.unwrap(body[2:])
+            if mode == 1:
+                dense_v = np.empty(len(raw) // itemsize, dtype=dt)
+                bss.unsplit(raw, dense_v.view(np.uint8).reshape(-1, itemsize))
             else:
-                dense_v = raw.view(dt)
+                dense_v = np.frombuffer(raw, dtype=dt)
         vals = _expand(dense_v, valid)
-        return pa.Array.from_buffers(typ, n, [vbuf, pa.py_buffer(vals.tobytes())])
+        return pa.Array.from_buffers(typ, n, [vbuf, _buf(vals)])
     if kind == KIND_STR:
         mode = mv[off]
         off += 1
@@ -523,7 +528,7 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
             doffs = np.zeros(len(dlen) + 1, dtype=np.int32)
             np.cumsum(dlen, out=doffs[1:])
             dict_arr = pa.Array.from_buffers(
-                pa.utf8(), len(dlen), [None, pa.py_buffer(doffs.tobytes()), pa.py_buffer(ddata)]
+                pa.utf8(), len(dlen), [None, _buf(doffs), pa.py_buffer(ddata)]
             )
             dense_strs = pc.take(dict_arr, pa.array(idx, type=pa.int64()))
             lengths, data = _string_parts(dense_strs)
@@ -537,9 +542,7 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
         off_dt = np.int64 if large else np.int32
         offsets = np.zeros(n + 1, dtype=off_dt)
         np.cumsum(full_len, out=offsets[1:])
-        return pa.Array.from_buffers(
-            typ, n, [vbuf, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)]
-        )
+        return pa.Array.from_buffers(typ, n, [vbuf, _buf(offsets), pa.py_buffer(data)])
     if kind == KIND_LIST:
         lbody, off = _read_frame(mv, off)
         cbody, off = _read_frame(mv, off)
@@ -550,18 +553,15 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
         off_dt = np.int64 if large else np.int32
         offsets = np.zeros(n + 1, dtype=off_dt)
         np.cumsum(full_len, out=offsets[1:])
-        return pa.Array.from_buffers(
-            typ, n, [vbuf, pa.py_buffer(offsets.tobytes())], children=[child]
-        )
+        return pa.Array.from_buffers(typ, n, [vbuf, _buf(offsets)], children=[child])
     if kind == KIND_BOOL:
         body, off = _read_frame(mv, off)
         packed_dense = np.frombuffer(general.unwrap(body), dtype=np.uint8)
-        n_dense = int(valid.sum()) if valid is not None else n
-        dense = np.unpackbits(packed_dense, count=n_dense, bitorder="little").astype(bool)
-        vals = _expand(dense, valid, fill=False)
-        return pa.Array.from_buffers(
-            pa.bool_(), n, [vbuf, pa.py_buffer(np.packbits(vals, bitorder="little").tobytes())]
-        )
+        if valid is not None:  # else the stored bits are the values' bitmap
+            dense = np.unpackbits(packed_dense, count=int(valid.sum()), bitorder="little")
+            packed_dense = np.packbits(_expand(dense.view(bool), valid, fill=False),
+                                       bitorder="little")
+        return pa.Array.from_buffers(pa.bool_(), n, [vbuf, _buf(packed_dense)])
     if kind == KIND_DEC128:
         lo_body, off = _read_frame(mv, off)
         hi_body, off = _read_frame(mv, off)
@@ -575,7 +575,7 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
             full = np.zeros(n * 2, dtype=np.int64)
             full[np.repeat(valid, 2)] = lanes
             lanes = full
-        return pa.Array.from_buffers(typ, n, [vbuf, pa.py_buffer(lanes.tobytes())])
+        return pa.Array.from_buffers(typ, n, [vbuf, _buf(lanes)])
     if kind == KIND_DEC256:
         lanes_dec = [None] * 4
         for lane in range(4):
@@ -589,7 +589,7 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
             full = np.zeros(n * 4, dtype=np.int64)
             full[np.repeat(valid, 4)] = lanes
             lanes = full
-        return pa.Array.from_buffers(typ, n, [vbuf, pa.py_buffer(lanes.tobytes())])
+        return pa.Array.from_buffers(typ, n, [vbuf, _buf(lanes)])
     if kind == KIND_STRUCT:
         (n_children,) = struct.unpack_from("<I", mv, off)
         off += 4
@@ -611,9 +611,7 @@ def decode_array(buf: bytes | memoryview, typ: pa.DataType) -> pa.Array:
         entries = pa.StructArray.from_arrays(
             [keys, items], fields=[typ.key_field, typ.item_field]
         )
-        return pa.Array.from_buffers(
-            typ, n, [vbuf, pa.py_buffer(offsets.tobytes())], children=[entries]
-        )
+        return pa.Array.from_buffers(typ, n, [vbuf, _buf(offsets)], children=[entries])
     if kind == KIND_IPC:
         body, off = _read_frame(mv, off)
         with pa.ipc.open_stream(pa.py_buffer(general.unwrap(body))) as r:

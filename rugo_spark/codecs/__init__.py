@@ -1,9 +1,11 @@
 """Codec registry: lightweight integer codecs + byte-stream codecs.
 
 Integer codecs operate on int64 logical values (``encode(np.ndarray) ->
-bytes``, ``decode(bytes) -> np.ndarray[int64]``); the block layer handles
-original dtypes and nulls.  Names mirror the reference's encoding vocabulary
-(rugo ``metadata.cpp:89-112``).
+bytes``, ``decode(bytes, dtype=np.int64) -> np.ndarray[dtype]``, wrapped to
+``dtype``'s width as ``astype`` from int64 wraps, so the block layer decodes
+straight into a column's storage dtype); the block layer handles nulls.
+Names mirror the reference's encoding vocabulary (rugo
+``metadata.cpp:89-112``).
 """
 
 from __future__ import annotations
@@ -14,8 +16,8 @@ import numpy as np
 
 from rugo_spark.codecs import bss, dictionary, foref, fsst, general, plain, rle  # noqa: F401
 
-# name → (encode, decode) over int64 arrays
-INT_CODECS: dict[str, tuple[Callable[[np.ndarray], bytes], Callable[[bytes], np.ndarray]]] = {
+# name → (encode, decode) over int64 arrays; decode takes an optional dtype
+INT_CODECS: dict[str, tuple[Callable[[np.ndarray], bytes], Callable[..., np.ndarray]]] = {
     "plain": (plain.encode, plain.decode),
     "bss": (bss.encode, bss.decode),
     "for": (foref.for_encode, foref.for_decode),
@@ -24,10 +26,10 @@ INT_CODECS: dict[str, tuple[Callable[[np.ndarray], bytes], Callable[[bytes], np.
     "dict": (dictionary.encode, dictionary.decode),
 }
 
-# name → (encode, decode) over raw bytes
+# name → (encode, decode) over raw bytes; decode may return a view
 BYTES_CODECS: dict[str, tuple[Callable[[bytes], bytes], Callable[[bytes], bytes]]] = {
     "fsst": (fsst.encode, fsst.decode),
-    "raw": (lambda b: bytes(b), lambda b: bytes(b)),
+    "raw": (lambda b: bytes(b), lambda b: b),
 }
 
 # PINNED on-disk codec ids — these bytes live inside every written block

@@ -53,7 +53,8 @@ def pack(values: np.ndarray, width: int) -> bytes:
 
 
 def unpack(buf: bytes | memoryview, n: int, width: int) -> np.ndarray:
-    """Inverse of :func:`pack` → uint64 array of length ``n``."""
+    """Inverse of :func:`pack` → ``n`` values in the narrowest unsigned
+    dtype that holds ``width`` bits (uint64 when ``width`` is 0)."""
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint64)
     nb = (n + 7) // 8
@@ -62,4 +63,4 @@ def unpack(buf: bytes | memoryview, n: int, width: int) -> np.ndarray:
     out = np.zeros(n, dtype=dt)
     for b in range(width):
         out |= np.unpackbits(planes[b], count=n, bitorder="little").astype(dt) << dt(b)
-    return out.astype(np.uint64)
+    return out

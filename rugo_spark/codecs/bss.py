@@ -39,13 +39,30 @@ def encode(values: np.ndarray) -> bytes:
     return _HDR.pack(base, itemsize, n) + planes.tobytes()
 
 
-def decode(buf: bytes | memoryview) -> np.ndarray:
+def unsplit(raw, dst: np.ndarray) -> None:
+    """Copy the byte planes in ``raw`` into the columns of ``dst``, an
+    ``(n, k)`` uint8 view of an output array: plane ``b`` (``n`` bytes)
+    becomes byte ``b`` of every value.  One strided pass per plane, with no
+    transposed temporary."""
+    n, k = dst.shape
+    src = np.frombuffer(raw, dtype=np.uint8, count=n * k).reshape(k, n)
+    for b in range(k):
+        dst[:, b] = src[b]
+
+
+def decode(buf: bytes | memoryview, dtype=np.int64) -> np.ndarray:
+    """Values as ``dtype``, wrapped to its width as ``astype`` from int64
+    wraps (the block layer passes a column's storage dtype)."""
+    dtype = np.dtype(dtype)
     base, itemsize, n = _HDR.unpack_from(buf, 0)
     if n == 0:
-        return np.empty(0, dtype=np.int64)
-    raw = np.frombuffer(buf, dtype=np.uint8, count=n * itemsize, offset=_HDR.size)
-    if itemsize == 1:
-        u = raw
-    else:
-        u = np.ascontiguousarray(raw.reshape(itemsize, n).T).view(_WIDTH_DT[itemsize]).ravel()
-    return u.astype(np.int64) + np.int64(base)
+        return np.empty(0, dtype=dtype)
+    # the planes fill the low bytes of a zeroed output (np.zeros: a strided
+    # zeroing pass took 5 of 6.5 ms on 1.8M two-byte values); a target
+    # narrower than the planes takes them at their own width and narrows
+    out = np.zeros(n, dtype=dtype if itemsize <= dtype.itemsize else _WIDTH_DT[itemsize])
+    unsplit(memoryview(buf)[_HDR.size :], out.view(np.uint8).reshape(n, -1)[:, :itemsize])
+    out = out.astype(dtype, copy=False)
+    if base:
+        out += np.array(base, dtype=np.int64).astype(dtype)
+    return out

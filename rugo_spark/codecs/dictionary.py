@@ -49,14 +49,13 @@ def encode(values: np.ndarray) -> bytes:
     return _HDR.pack(n, len(uniq), len(dict_blob)) + dict_blob + idx_blob
 
 
-def decode(buf: bytes | memoryview) -> np.ndarray:
+def decode(buf: bytes | memoryview, dtype=np.int64) -> np.ndarray:
     mv = memoryview(buf)
     n, card, dict_len = _HDR.unpack_from(mv, 0)
     off = _HDR.size
-    uniq = foref.delta_decode(mv[off : off + dict_len])
+    uniq = foref.delta_decode(mv[off : off + dict_len], dtype)
     off += dict_len
     if n == 0:
-        return np.empty(0, dtype=np.int64)
+        return np.empty(0, dtype=dtype)
     (idx_width,) = struct.unpack_from("<B", mv, off)
-    inv = bitpack.unpack(mv[off + 1 :], n, idx_width).astype(np.int64)
-    return uniq[inv]
+    return uniq[bitpack.unpack(mv[off + 1 :], n, idx_width)]

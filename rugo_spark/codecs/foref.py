@@ -41,10 +41,14 @@ def for_encode(values: np.ndarray) -> bytes:
     return _FOR_HDR.pack(base, width, n) + bitpack.pack(deltas, width)
 
 
-def for_decode(buf: bytes | memoryview) -> np.ndarray:
+def for_decode(buf: bytes | memoryview, dtype=np.int64) -> np.ndarray:
+    """Values as ``dtype``, wrapped to its width as ``astype`` from int64
+    wraps."""
     base, width, n = _FOR_HDR.unpack_from(buf, 0)
-    deltas = bitpack.unpack(memoryview(buf)[_FOR_HDR.size :], n, width)
-    return (deltas.astype(np.int64)) + np.int64(base)
+    out = bitpack.unpack(memoryview(buf)[_FOR_HDR.size :], n, width).astype(dtype)
+    if base:
+        out += np.array(base, dtype=np.int64).astype(dtype)
+    return out
 
 
 def zigzag(values: np.ndarray) -> np.ndarray:
@@ -72,14 +76,14 @@ def delta_encode(values: np.ndarray) -> bytes:
     return _FOR_HDR.pack(first, width, n) + bitpack.pack(z, width)
 
 
-def delta_decode(buf: bytes | memoryview) -> np.ndarray:
+def delta_decode(buf: bytes | memoryview, dtype=np.int64) -> np.ndarray:
     first, width, n = _FOR_HDR.unpack_from(buf, 0)
     if n == 0:
-        return np.empty(0, dtype=np.int64)
+        return np.empty(0, dtype=dtype)
     z = bitpack.unpack(memoryview(buf)[_FOR_HDR.size :], n - 1, width)
     out = np.empty(n, dtype=np.int64)
     out[0] = first
     if n > 1:
         np.cumsum(unzigzag(z), out=out[1:])
         out[1:] += first
-    return out
+    return out.astype(dtype, copy=False)

@@ -29,9 +29,11 @@ def wrap(payload: bytes, codec: int = ZSTD, auto: bool = True) -> bytes:
     return _HDR.pack(RAW, len(payload)) + payload
 
 
-def unwrap(buf: bytes | memoryview) -> bytes:
+def unwrap(buf: bytes | memoryview) -> memoryview:
+    """The payload of a frame, without a copy: a view into ``buf`` for RAW,
+    else into the decompressed Arrow buffer (kept alive by the view)."""
     codec, orig_len = _HDR.unpack_from(buf, 0)
     body = memoryview(buf)[_HDR.size :]
     if codec == RAW:
-        return bytes(body)
-    return pa.Codec(_PA[codec]).decompress(body, orig_len, asbytes=True)
+        return body
+    return memoryview(pa.Codec(_PA[codec]).decompress(body, orig_len)).cast("B")

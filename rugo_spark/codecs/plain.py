@@ -30,7 +30,7 @@ def encode(values: np.ndarray) -> bytes:
     raise AssertionError("unreachable: int64 always fits")
 
 
-def decode(buf: bytes | memoryview) -> np.ndarray:
+def decode(buf: bytes | memoryview, dtype=np.int64) -> np.ndarray:
     n, itemsize = _HDR.unpack_from(buf, 0)
     dt = _WIDTH_DTYPE[itemsize]
-    return np.frombuffer(buf, dtype=dt, count=n, offset=_HDR.size).astype(np.int64)
+    return np.frombuffer(buf, dtype=dt, count=n, offset=_HDR.size).astype(dtype)

@@ -37,14 +37,13 @@ def encode(values: np.ndarray) -> bytes:
     return _HDR.pack(n, len(run_values), len(vals_blob)) + vals_blob + lens_blob
 
 
-def decode(buf: bytes | memoryview) -> np.ndarray:
+def decode(buf: bytes | memoryview, dtype=np.int64) -> np.ndarray:
     mv = memoryview(buf)
     n, n_runs, vals_len = _HDR.unpack_from(mv, 0)
     off = _HDR.size
-    run_values = foref.for_decode(mv[off : off + vals_len])
+    run_values = foref.for_decode(mv[off : off + vals_len], dtype)
     off += vals_len
     if n == 0:
-        return np.empty(0, dtype=np.int64)
+        return np.empty(0, dtype=dtype)
     (len_width,) = struct.unpack_from("<B", mv, off)
-    run_lengths = bitpack.unpack(mv[off + 1 :], n_runs, len_width).astype(np.int64)
-    return np.repeat(run_values, run_lengths)
+    return np.repeat(run_values, bitpack.unpack(mv[off + 1 :], n_runs, len_width))

@@ -795,8 +795,8 @@ def _encode_splits(df: DataFrame, out_dir, sort_key, size_col, plans, pid_base: 
       file splits, read in the task with pyarrow
       — no JVM Parquet decode and no row-to-Arrow transfer into Python.
       The splits not yet encoded are dealt round-robin over
-      ``min(splits, defaultParallelism)`` tasks of a ``spark.range``
-      source, so a resume reads only missing splits;
+      ``min(splits, defaultParallelism)`` tasks of ``_task_map``'s
+      ``spark.range`` source, so a resume reads only missing splits;
     - anything else: ``df.mapInArrow``, one task per split of ``df``.
 
     The sort is what makes the two sources write the same bytes: it lays
@@ -830,7 +830,6 @@ def _encode_splits(df: DataFrame, out_dir, sort_key, size_col, plans, pid_base: 
         ]
         if not work:
             return
-        n = min(len(work), spark.sparkContext.defaultParallelism)
     seg_bc = spark.sparkContext.broadcast(seg_arr)
 
     def block(pid: int, read):
@@ -857,18 +856,20 @@ def _encode_splits(df: DataFrame, out_dir, sort_key, size_col, plans, pid_base: 
             if row is not None:
                 yield row
 
-        src = df
+        out = df.mapInArrow(encoder, mf.MANIFEST_SCHEMA)
     else:
         def encoder(batches):
-            for _ in batches:  # the range rows only size the task set
-                pass
-            for pid, files in work[TaskContext.get().partitionId()::n]:
-                row = block(pid, lambda files=files: _read_split(files))
-                if row is not None:
-                    yield row
+            for batch in batches:
+                for pid, files in zip(*(c.to_pylist() for c in batch.columns)):
+                    row = block(pid, lambda files=files: _read_split(files))
+                    if row is not None:
+                        yield row
 
-        src = spark.range(n, numPartitions=n)
-    src.mapInArrow(encoder, mf.MANIFEST_SCHEMA).write.mode("overwrite").format("noop").save()
+        out = _task_map(
+            spark, {"pid": [p for p, _ in work], "files": [f for _, f in work]},
+            encoder, mf.MANIFEST_SCHEMA,
+        )
+    out.write.mode("overwrite").format("noop").save()
 
 
 def encode_table_sorted(
@@ -1537,8 +1538,11 @@ def _candidate_scan(
     size_col = (mf.read_schema_payload(out_dir) or {}).get("size_col")
     tok_col = size_col if size_col in arrow_schema.names else None
     decode_cols = sorted({c for c, _, _ in filters} | ({tok_col} if tok_col else set()))
-    cand_pids = [int(r["partition_id"]) for r in cands]
-    cand_paths = [r["block_path"] for r in cands]
+    src = pa.RecordBatch.from_arrays(
+        [pa.array([int(r["partition_id"]) for r in cands], pa.int64()),
+         pa.array([r["block_path"] for r in cands], pa.string())],
+        names=["pid", "block_path"],
+    )
 
     def scan(batches, prior_masks):
         import numpy as np
@@ -1566,14 +1570,12 @@ def _candidate_scan(
                 yield from emit(int(pid), tbl, pos, n_rows, sz)
 
     if _in_driver(cands, decode_cols, out_schema):
-        src = pa.RecordBatch.from_arrays(
-            [pa.array(cand_pids, pa.int64()), pa.array(cand_paths, pa.string())],
-            names=["pid", "block_path"],
-        )
         return _arrow_df(spark, scan([src], prior_all), out_schema), pids
     prior_bc = spark.sparkContext.broadcast(prior_all)
-    src_df = _spec_src_df(spark, pid=cand_pids, block_path=cand_paths)
-    return src_df.mapInArrow(lambda it: scan(it, prior_bc.value), out_schema), pids
+    return _task_map(
+        spark, src, lambda it: scan(it, prior_bc.value), out_schema,
+        [_raw_bytes(r, decode_cols) for r in cands],
+    ), pids
 
 
 def _entry_batch(pid, tbl, pos, n_rows, sz):
@@ -2198,12 +2200,10 @@ def encode_table(
     # checkpoint-restart: skip partitions whose sidecar already exists
     done = [r["partition_id"] for r in mf.completed_partitions(out_dir)]
     if done:
-        import pandas as pd
         import pyspark.sql.functions as F
 
-        done_df = spark.createDataFrame(
-            pd.DataFrame({"__rugo_pid": pd.array(done, dtype="int32")})
-        )
+        done_batch = pa.record_batch({"__rugo_pid": pa.array(done, pa.int32())})
+        done_df = _arrow_df(spark, [done_batch], from_arrow_schema(done_batch.schema))
         planned = planned.join(F.broadcast(done_df), "__rugo_pid", "left_anti")
 
     _extra = {"size_col": size_col} if size_col is not None else {}
@@ -2410,12 +2410,7 @@ def _auto_string_plans(df: DataFrame, out_dir: str, plans: dict | None) -> dict 
                 )
             else:
                 sdf = sdf.limit(_CODEC_SAMPLE_ROWS)
-            sample = (
-                sdf.toArrow()
-                if hasattr(sdf, "toArrow")
-                else pa.Table.from_pandas(sdf.toPandas())
-            )
-            persisted = _build_string_plans(sample)
+            persisted = _build_string_plans(sdf.toArrow())
         mf.write_codec_plans(out_dir, persisted)
     if not persisted:
         return plans
@@ -2631,6 +2626,27 @@ def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
+def _rows_df(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
+    """A LocalRelation of Python ``rows`` under the DDL schema ``ddl``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    return _arrow_df(
+        spark, [pa.RecordBatch.from_pylist(rows, schema=to_arrow_schema(schema))], schema
+    )
+
+
+_SNAPSHOTS_DDL = (
+    "snapshot_id int, op string, n_partitions long, n_rows long, "
+    "n_tokens long, output_bytes long, ranges string"
+)
+_STATS_DDL = (
+    "partition_id int, column string, codec string, enc_bytes long, "
+    "raw_bytes long, null_count long, min string, max string, distinct_est long"
+)
+
+
 def snapshots_df(spark: SparkSession, out_dir: str) -> DataFrame:
     """The dataset's snapshot lineage as a DataFrame (the Iceberg
     ``.snapshots`` metadata-table analog): one row per commit that changed
@@ -2638,37 +2654,25 @@ def snapshots_df(spark: SparkSession, out_dir: str) -> DataFrame:
     visible pid ranges (JSON).  Feed ``snapshot_id`` values into
     ``decode_table``/``metadata_agg`` for time travel, or into
     ``manifest.rollback_to_snapshot``."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromDDL(
-        "snapshot_id int, op string, n_partitions long, n_rows long, "
-        "n_tokens long, output_bytes long, ranges string"
-    )
-    log = mf.snapshot_log(out_dir, strict=True)
-    if not log:
-        return spark.createDataFrame([], schema)
-    pdf = pd.DataFrame(
+    rows = [
         {
-            "snapshot_id": [int(e["id"]) for e in log],
-            "op": [e.get("op") for e in log],
-            "n_partitions": [int(e.get("n_partitions") or 0) for e in log],
-            "n_rows": [int(e.get("n_rows") or 0) for e in log],
-            "n_tokens": [int(e.get("n_tokens") or 0) for e in log],
-            "output_bytes": [int(e.get("output_bytes") or 0) for e in log],
-            "ranges": [json.dumps(e.get("ranges")) for e in log],
+            "snapshot_id": int(e["id"]),
+            "op": e.get("op"),
+            "n_partitions": int(e.get("n_partitions") or 0),
+            "n_rows": int(e.get("n_rows") or 0),
+            "n_tokens": int(e.get("n_tokens") or 0),
+            "output_bytes": int(e.get("output_bytes") or 0),
+            "ranges": json.dumps(e.get("ranges")),
         }
-    )
-    return spark.createDataFrame(pdf, schema)
+        for e in mf.snapshot_log(out_dir, strict=True)
+    ]
+    return _rows_df(spark, rows, _SNAPSHOTS_DDL)
 
 
 def stats_df(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-(partition, column) statistics table — the reference's
     one-row-per-(row_group, column) stats surface (SURVEY.md §1.1) as a
     DataFrame: codec, encoded/raw bytes, null_count, min/max, distinct est."""
-    import pandas as pd
-
     rows = []
     for r in mf.visible_partitions(out_dir):
         for col, m in json.loads(r["codecs"]).items():
@@ -2685,16 +2689,7 @@ def stats_df(spark: SparkSession, out_dir: str) -> DataFrame:
                     "distinct_est": int(m["distinct_est"]) if m.get("distinct_est") else None,
                 }
             )
-    pdf = pd.DataFrame(
-        rows,
-        columns=["partition_id", "column", "codec", "enc_bytes", "raw_bytes",
-                 "null_count", "min", "max", "distinct_est"],
-    )
-    return spark.createDataFrame(
-        pdf,
-        "partition_id int, column string, codec string, enc_bytes long, "
-        "raw_bytes long, null_count long, min string, max string, distinct_est long",
-    )
+    return _rows_df(spark, rows, _STATS_DDL)
 
 
 def _meta_aggregatable(t: pa.DataType) -> bool:
@@ -2723,10 +2718,6 @@ def _metadata_partials_distributed(
     slices), merge it with ``merge_column_metas`` and emit ONE partial row
     each; the driver merges only #tasks rows — at 10⁵–10⁶ partitions it
     never holds more than task-count JSON documents."""
-    src = _spec_src_df(
-        spark,
-        spec=[json.dumps(x) for x in mf.scan_specs(out_dir, _STATS_COLS, keep_ranges)],
-    )
     want = set(cols)
 
     def merger(batches):
@@ -2752,7 +2743,11 @@ def _metadata_partials_distributed(
                     names=["n_rows", "n_tokens", "codecs"],
                 )
 
-    out = src.mapInArrow(merger, "n_rows long, n_tokens long, codecs string")
+    out = _task_map(
+        spark,
+        {"spec": [json.dumps(x) for x in mf.scan_specs(out_dir, _STATS_COLS, keep_ranges)]},
+        merger, "n_rows long, n_tokens long, codecs string",
+    )
     return [r.asDict() for r in out.collect()]
 
 
@@ -3012,12 +3007,6 @@ def compact_dataset(
                     extra=extras or None)
     blocks_dir = os.path.join(dst_dir, mf.BLOCKS_DIR)
 
-    import pandas as pd
-
-    src = spark.createDataFrame(
-        pd.DataFrame({"spec": [json.dumps(s) for s in specs]})
-    ).repartition(len(specs))
-
     def compactor(batches):
         from rugo_spark import bloom as _bloom
 
@@ -3078,7 +3067,10 @@ def compact_dataset(
                 row["checksum"] = int(crc)
                 yield emit_sidecar(dst_dir, row)
 
-    src.mapInArrow(compactor, mf.MANIFEST_SCHEMA).write.mode("overwrite").format("noop").save()
+    _task_map(
+        spark, {"spec": [json.dumps(s) for s in specs]}, compactor, mf.MANIFEST_SCHEMA,
+        [sum(int(g.get("input_bytes") or 0) for g in grp) for grp in groups],
+    ).write.mode("overwrite").format("noop").save()
     if consolidate:
         mf.consolidate_manifest(dst_dir)
     mf.commit_snapshot(dst_dir, "compact", extra={"src": os.path.abspath(src_dir)})
@@ -3308,24 +3300,32 @@ def _in_driver(rows: list[dict], cols: list[str] | None, schema) -> bool:
     LocalRelation (``_arrow_df``) — no Spark job at all.  A one-task
     ``mapInArrow`` job costs 0.1-0.3 s before it decodes a byte; a
     6,000-row LocalRelation's filter + collect ~45 ms (local[2], 4 vCPUs).
-    The size: the per-column ``raw_bytes`` of ``cols`` (None: all) where the
-    plan carries ``codecs`` (filtered reads, DML scans), else the blocks'
-    ``input_bytes``.  A ``schema`` pyspark's Arrow → DataFrame path cannot
-    take (``_localize_drops_not_null``) keeps the ``mapInArrow`` stage."""
+    The size is ``_raw_bytes``: the per-column ``raw_bytes`` of ``cols``
+    where the plan carries ``codecs`` (filtered reads, DML scans), else the
+    blocks' ``input_bytes``.  A ``schema`` pyspark's Arrow → DataFrame path
+    cannot take (``_localize_drops_not_null``) keeps the ``mapInArrow``
+    stage."""
     if any(_localize_drops_not_null(f.dataType) for f in schema.fields):
         return False
     total = 0
     for r in rows:
-        if "codecs" in r:
-            total += sum(
-                int(m.get("raw_bytes") or 0) for c, m in json.loads(r["codecs"]).items()
-                if cols is None or c in cols
-            )
-        else:
-            total += int(r.get("input_bytes") or 0)
+        total += _raw_bytes(r, cols)
         if total > _STRIPE_TARGET_BYTES:
             return False
     return True
+
+
+def _raw_bytes(row: dict, cols: list[str] | None) -> int:
+    """A planned block's decoded size, the measure of ``_in_driver`` and of
+    the task rule (``_deal``): the per-column ``raw_bytes`` of ``cols``
+    (None: all) where the plan row carries ``codecs``, else the block's
+    ``input_bytes``."""
+    if "codecs" in row:
+        return sum(
+            int(m.get("raw_bytes") or 0) for c, m in json.loads(row["codecs"]).items()
+            if cols is None or c in cols
+        )
+    return int(row.get("input_bytes") or 0)
 
 
 def _localize_drops_not_null(t) -> bool:
@@ -3407,13 +3407,57 @@ def _plan_cols(filters) -> list[str]:
     return ["block_path", "checksum"] + (["codecs", "bloom_col", "bloom"] if filters else [])
 
 
-def _spec_src_df(spark: SparkSession, **cols: list):
-    """A task source frame: one row per unit of work (a candidate block, a
-    ~256-sidecar chunk, a segment row-group slice), one task per row up to
-    4 waves/core.  ``cols``: equal-length column lists."""
-    tbl = pa.table(cols)
-    n_tasks = max(1, min(tbl.num_rows, spark.sparkContext.defaultParallelism * 4))
-    return _arrow_df(spark, tbl.to_batches(), from_arrow_schema(tbl.schema)).repartition(n_tasks)
+# A Python task costs ~50 ms of its slot before its kernel runs (local[2],
+# 4 vCPUs).  A decode task moves ~300 MB/s of Arrow out of its worker (the
+# traced mutate full scan: 118 MB in 0.40 s of worker time), so a task of
+# this many bytes runs ~0.2 s and the fixed cost stays a small share of it.
+# Splitting that scan's 118 MB over 4 tasks instead of 2 made it slower.
+_TASK_MIN_BYTES = 64 << 20
+
+
+def _deal(sizes: list[int] | None, n_items: int, parallelism: int,
+          num_tasks: int | None = None) -> list[list[int]]:
+    """The task rule: the work item indices of each task.  ``num_tasks``
+    tasks when given; else ``parallelism``, or one per ``_TASK_MIN_BYTES``
+    of ``sizes`` (bytes per item; None counts items only) when that is
+    more; never more than there are items.  Items are dealt largest first
+    onto the lightest task (ties: the fewest items, then the lowest task —
+    equal items go round-robin), and each task keeps them in item order."""
+    import heapq
+
+    weights = sizes if sizes is not None else [1] * n_items
+    n = num_tasks or max(parallelism, sum(sizes or ()) // _TASK_MIN_BYTES)
+    n = max(1, min(int(n), n_items))
+    heap = [(0, 0, t) for t in range(n)]
+    shares: list[list[int]] = [[] for _ in range(n)]
+    for i in sorted(range(n_items), key=lambda i: -weights[i]):
+        load, count, t = heapq.heappop(heap)
+        shares[t].append(i)
+        heapq.heappush(heap, (load + weights[i], count + 1, t))
+    return [sorted(share) for share in shares]
+
+
+def _task_map(spark: SparkSession, work: dict[str, list] | pa.RecordBatch, kernel, schema,
+              sizes: list[int] | None = None, num_tasks: int | None = None) -> DataFrame:
+    """The one executor task source: ``kernel`` (a ``mapInArrow`` function
+    over RecordBatches of work rows) on ``spark.range(n, numPartitions=n)``,
+    which is one stage with no exchange.  ``work`` (equal-length column
+    lists, or a RecordBatch) holds one row per unit of work (a block, a
+    manifest spec, a split); ``_deal`` splits the rows over ``n`` tasks by
+    their byte ``sizes`` (or ``num_tasks``), and each task reads its share
+    from a broadcast: the range rows only name the shares."""
+    tbl = pa.table(work)
+    shares = [
+        tbl.take(pa.array(idx, pa.int64())).to_batches()
+        for idx in _deal(sizes, tbl.num_rows, spark.sparkContext.defaultParallelism, num_tasks)
+    ]
+    shares_bc = spark.sparkContext.broadcast(shares)
+
+    def run(rows):
+        ids = [t for batch in rows for t in batch.column(0).to_pylist()]
+        yield from kernel(b for t in ids for b in shares_bc.value[t])
+
+    return spark.range(len(shares), numPartitions=len(shares)).mapInArrow(run, schema)
 
 
 def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges=None):
@@ -3426,7 +3470,6 @@ def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges
     import pyarrow as _pa
 
     specs = mf.scan_specs(out_dir, _plan_cols(filters), keep_ranges)
-    src = _spec_src_df(spark, spec=[json.dumps(x) for x in specs])
 
     def planner(batches):
         for batch in batches:
@@ -3442,7 +3485,7 @@ def _plan_df_distributed(spark: SparkSession, out_dir: str, filters, keep_ranges
                     names=["block_path", "checksum"],
                 )
 
-    return src.mapInArrow(planner, _PLAN_SCHEMA)
+    return _task_map(spark, {"spec": [json.dumps(x) for x in specs]}, planner, _PLAN_SCHEMA)
 
 
 def _decode_plan(
@@ -3455,13 +3498,15 @@ def _decode_plan(
     cols: list[str] | None,
     out_schema,
 ):
-    """``decode_table``'s plan: ``(source, delete_file_names)``.  ``source``
-    is None when no block survives; one ``(block_path, checksum)``
-    RecordBatch to decode in the driver when the plan is small
-    (``_in_driver`` over the decoded ``cols`` and the decoder's
-    ``out_schema``) and ``num_tasks`` is not given; else a DataFrame of those rows for executors.  Small manifests
-    plan on the driver (``plan``); large ones in an executor stage over the
-    same specs (``_plan_df_distributed``)."""
+    """``decode_table``'s plan: ``(source, sizes, delete_file_names)``.
+    ``source`` is None when no block survives.  A small manifest plans on
+    the driver (``plan``) into a ``(block_path, checksum)`` RecordBatch,
+    decoded in the driver when the plan is small (``_in_driver`` over the
+    decoded ``cols`` and the decoder's ``out_schema``) and ``num_tasks`` is
+    not given (``sizes`` None), else dealt over executor tasks by the
+    blocks' decoded ``sizes`` (``_task_map``).  A large manifest plans in
+    an executor stage over the same specs (``_plan_df_distributed``): a
+    DataFrame of those rows, re-split only for an explicit ``num_tasks``."""
     if _plan_on_executors(*mf.manifest_size(out_dir), stats=False):
         man, names = _one_commit(
             out_dir, snapshot_id,
@@ -3469,30 +3514,19 @@ def _decode_plan(
         )
         if num_tasks:  # else decode runs on the planner's partitioning
             man = man.repartition(max(1, min(int(num_tasks), 4096)))
-        return man, names
-    rows, names = plan(out_dir, _plan_cols(filters) + ["input_bytes", "output_bytes"],
+        return man, None, names
+    rows, names = plan(out_dir, _plan_cols(filters) + ["input_bytes"],
                        filters, keep_ranges, snapshot_id)
     if not rows:
-        return None, names
+        return None, None, names
     src = pa.RecordBatch.from_arrays(
         [pa.array([r["block_path"] for r in rows], pa.string()),
          pa.array([int(r["checksum"]) for r in rows], pa.int64())],
         schema=_PLAN_ARROW,
     )
     if num_tasks is None and _in_driver(rows, cols, out_schema):
-        return src, names
-    if num_tasks is None:
-        # one task per block is right for few big blocks, pathological
-        # for many small ones (a Python task holds its slot ~50 ms, ~250 ms
-        # without session.install_lazy_zip_invalidation): target ≥4 waves
-        # per core OR ~32 MB per task, whichever gives more tasks
-        total_bytes = sum(int(r.get("output_bytes") or 0) for r in rows)
-        num_tasks = min(
-            len(rows),
-            max(spark.sparkContext.defaultParallelism * 4, total_bytes // (32 << 20)),
-        )
-    src_df = _arrow_df(spark, [src], _PLAN_SCHEMA)
-    return src_df.repartition(max(1, min(int(num_tasks), 4096))), names
+        return src, None, names
+    return src, [_raw_bytes(r, cols) for r in rows], names
 
 
 def decode_table(
@@ -3506,9 +3540,13 @@ def decode_table(
     snapshot_id: int | None = None,
 ) -> DataFrame:
     """Reconstruct the original DataFrame from blocks, no shuffle.
-    ``_decode_plan`` packs the blocks into tasks (a driver plan: at most
-    ``max(4 × defaultParallelism, bytes / 32 MB)``), each reading its blocks
-    through ``read_live``; column pruning skips undecoded columns entirely;
+    ``_decode_plan`` deals the blocks over the tasks of one shuffle-free
+    stage (``_task_map``), each reading its blocks through ``read_live``.
+    ``num_tasks`` sets the task count (capped at the block count); by
+    default it is ``defaultParallelism``, or one task per 64 MB of
+    decoded Arrow (``_TASK_MIN_BYTES``) when that is more, and never more
+    than the blocks.
+    Column pruning skips undecoded columns entirely;
     ``filters`` (ANDed ``(col, op, value)`` triples) skip whole blocks via
     manifest min/max stats *and* are re-applied exactly on the decoded rows.
 
@@ -3597,7 +3635,7 @@ def _decode(
     else:
         out_schema = full
     decode_cols = (list(columns) + extra_filter_cols) if columns else None
-    src, names = _decode_plan(
+    src, sizes, names = _decode_plan(
         spark, out_dir, filters, keep_ranges, snapshot_id, num_tasks, decode_cols, out_schema
     )
     if src is None:
@@ -3621,14 +3659,18 @@ def _decode(
 
                     print(f"rugo_spark: QUARANTINED {e}", file=_sys.stderr)
 
-    in_driver = isinstance(src, pa.RecordBatch)
+    in_driver = isinstance(src, pa.RecordBatch) and sizes is None
     if in_driver:
         out = _arrow_df(spark, decoder([src], masks_raw), out_schema)
     else:
         masks_bc = spark.sparkContext.broadcast(masks_raw) if masks_raw else None
-        out = src.mapInArrow(
-            lambda it: decoder(it, masks_bc.value if masks_bc is not None else {}),
-            out_schema,
+
+        def kernel(it):
+            return decoder(it, masks_bc.value if masks_bc is not None else {})
+
+        out = (
+            src.mapInArrow(kernel, out_schema) if sizes is None
+            else _task_map(spark, src, kernel, out_schema, sizes, num_tasks)
         )
     if filters:
         import pyspark.sql.functions as F
@@ -3851,12 +3893,6 @@ def read_changes(
     )
     if not parts:
         return spark.createDataFrame([], out_schema)
-    src = _spec_src_df(
-        spark,
-        kind=[k for k, _, _ in parts],
-        block_path=[p for _, p, _ in parts],
-        mask=[json.dumps(m) for _, _, m in parts],
-    )
 
     def changes(batches):
         for batch in batches:
@@ -3865,4 +3901,9 @@ def read_changes(
                     kind, path, json.loads(mask), arrow_schema, _live_phys, _p2l
                 )
 
-    return src.mapInArrow(changes, out_schema)
+    return _task_map(
+        spark,
+        {"kind": [k for k, _, _ in parts], "block_path": [p for _, p, _ in parts],
+         "mask": [json.dumps(m) for _, _, m in parts]},
+        changes, out_schema,
+    )

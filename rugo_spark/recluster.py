@@ -159,12 +159,6 @@ def recluster_dataset(
     rewritten_rows = 0
     gids_with_rows: set[int] = set()
     if band_meta:
-        bands_src = eng._spec_src_df(
-            spark,
-            pid=[int(r["partition_id"]) for r in band_meta],
-            path=[r["block_path"] for r in band_meta],
-        )
-
         def scan_bands(batches):
             from rugo_spark.engine import read_live
 
@@ -203,7 +197,12 @@ def recluster_dataset(
             list(StructType.fromJson(spark_schema).fields)
             + [StructField("__rugo_gid", LongType(), False)]
         )
-        bands_df = bands_src.mapInArrow(scan_bands, scan_schema)
+        bands_df = eng._task_map(
+            spark,
+            {"pid": [int(r["partition_id"]) for r in band_meta],
+             "path": [r["block_path"] for r in band_meta]},
+            scan_bands, scan_schema, [int(r.get("input_bytes") or 0) for r in band_meta],
+        )
 
         base_map = {
             i: (
@@ -268,8 +267,6 @@ def recluster_dataset(
         })
     n_copied = n_purged = 0
     if copy_specs:
-        cp_src = eng._spec_src_df(spark, spec=[json.dumps(s) for s in copy_specs])
-
         def copier(batches):
             import shutil as _sh
 
@@ -312,7 +309,9 @@ def recluster_dataset(
 
         kinds = [
             r["kind"]
-            for r in cp_src.mapInArrow(copier, "kind string").collect()
+            for r in eng._task_map(
+                spark, {"spec": [json.dumps(s) for s in copy_specs]}, copier, "kind string"
+            ).collect()
         ]
         n_copied = kinds.count("copied")
         n_purged = kinds.count("purged")

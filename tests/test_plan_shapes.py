@@ -48,14 +48,22 @@ def test_decode_is_shuffle_free(spark, tmp_out, monkeypatch):
     # a small read decodes in the driver: a local scan, no exchange at all
     plan = _plan(decode_table(spark, tmp_out))
     assert "LocalTableScan" in plan and "MapInArrow" not in plan and "Exchange" not in plan
-    # above the driver venue's limit: one repartition of PATHS (tiny
-    # strings) feeds the decoder; the decoded DATA never shuffles — no
-    # Exchange above the MapInArrow decoder
+    # above the driver venue's limit: the decoder runs on a spark.range
+    # task source (engine._task_map) — no exchange anywhere, neither of the
+    # block paths nor of the decoded data
     monkeypatch.setattr(engine, "_STRIPE_TARGET_BYTES", -1)
     plan = _plan(decode_table(spark, tmp_out))
-    assert plan.count("MapInArrow") == 1
-    decoder_part = plan.split("MapInArrow")[0]
-    assert "Exchange" not in decoder_part
+    assert plan.count("MapInArrow") == 1 and "Range" in plan
+    assert "Exchange" not in plan, plan
+    # the executor DML mask scan has the same shape
+    scan, pids = engine._candidate_scan(
+        spark, tmp_out, [("v", "<", 100)], None, engine._entry_batch,
+        engine._DELETE_ENTRY_SCHEMA,
+    )
+    assert pids
+    plan = _plan(scan)
+    assert plan.count("MapInArrow") == 1 and "Range" in plan
+    assert "Exchange" not in plan, plan
 
 
 def test_grouped_encode_single_data_shuffle(spark):
